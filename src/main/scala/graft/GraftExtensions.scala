@@ -4,12 +4,16 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
-import graft.plans.{AsOfJoinStrategy, GroupTopKStrategy, MvRewriteRule, SimJoinRewriteRule, SkylineStrategy, TopKRewriteRule}
+import graft.plans.{AsOfJoinStrategy, GroupTopKStrategy, MvRewriteRule, SimJoinRewriteRule, SkylineStrategy, SmallSortRule, TopKRewriteRule}
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`
   * (spark-submit / SparkSession.builder config): injects every graft
   * extension — the codegen'd scalar kernels as SQL functions, the
-  * window-top-k optimizer rewrite, and the GroupTopK planning strategy —
+  * optimizer rules (window top-k, similarity join, materialized-view
+  * rewrite), the planning strategies (GroupTopK, as-of join, skyline) and
+  * the AQE query-stage prep rule [[graft.plans.SmallSortRule]] (a global
+  * ORDER BY whose input AQE would read as one partition sorts in one task,
+  * without the range-sampling job) —
   * at session build time, the idiomatic way a Spark library ships Catalyst
   * extensions. The runtime registration paths
   * (`VectorFunctions.register` / `TextHashFunctions.register` /
@@ -54,5 +58,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => GroupTopKStrategy)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => SkylineStrategy)
+    e.injectQueryStagePrepRule(_ => SmallSortRule)
   }
 }

@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  private def tokens(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("word"))
-
   /** Top-3 TF-IDF terms per document. DF and N are tiny aggregates joined
     * back broadcast-style; the only corpus-sized shuffle is the (doc, word)
     * TF group.
@@ -31,7 +27,8 @@ object TextAnalysis {
   def tfidfTop3(spark: SparkSession, sfDir: String): DataFrame = {
     // fence: TF feeds both the DF aggregation and the scoring join
     val tf = Dedup.fence(
-      tokens(spark, sfDir).groupBy("doc_id", "word").agg(count(lit(1)).as("tf")),
+      WordCount.tokens(Tables.documents(spark, sfDir))
+        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")),
       "doc_id")
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, sfDir).agg(count(lit(1)).as("nd"))
@@ -181,7 +178,8 @@ object TextAnalysis {
     * — V rows, not corpus rows, so the single-partition window is free
     * at any corpus size. */
   def zipfSlope(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = tokens(spark, sfDir).groupBy("word").agg(count(lit(1)).as("cnt"))
+    val f = WordCount.tokens(Tables.documents(spark, sfDir))
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
     val r = f.withColumn("rank",
       row_number().over(Window.orderBy(desc("cnt"), asc("word"))))
     val p = r.select(
@@ -232,7 +230,7 @@ object TextAnalysis {
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
     val perBucket = docs.groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("toks"))
-    val news = tokens(spark, sfDir)
+    val news = WordCount.tokens(Tables.documents(spark, sfDir))
       .groupBy("word").agg(min("doc_id").as("first_doc"))
       .groupBy(expr(s"first_doc div $bw").as("bucket"))
       .agg(count(lit(1)).as("n_new"))
@@ -277,30 +275,36 @@ object TextAnalysis {
     * collect_set class list, exploded over the vocab — a scalar-side
     * cross, the one BNLJ shape PlanHygieneSpec admits), so constructing
     * the query schedules no job and each rep runs one corpus pass. The
-    * r13 enforced vocabulary bound survives as an in-plan loud guard:
-    * past 10^7 grid rows the projection raises rather than silently
-    * broadcasting hundreds of MB (swap the broadcast(grid) hints for a
-    * shuffled hash join on `word` beyond it). Values are unchanged: the
-    * same Laplace (cwc+1)/(tokc+V) at the same 8-place rounding.
+    * r13 enforced vocabulary bound survives as an in-plan loud guard,
+    * checked ONCE on that 1-row aggregate (the guarded `v` column): past
+    * 10^7 grid rows it raises rather than silently broadcasting hundreds
+    * of MB (swap the broadcast(grid) hints for a shuffled hash join on
+    * `word` beyond it). Values are unchanged: the same Laplace
+    * (cwc+1)/(tokc+V) at the same 8-place rounding.
     */
-  private def nbGrid(cw: DataFrame, ct: DataFrame, tag: String): DataFrame =
-    cw.select("word").distinct()
-      .crossJoin(broadcast(cw.agg(
+  private def nbGrid(cw: DataFrame, ct: DataFrame, tag: String): DataFrame = {
+    val shape = cw.agg(
         countDistinct(col("word")).as("v"),
-        sort_array(collect_set(col("c"))).as("langs"))))
-      .select(col("word"), col("v"), size(col("langs")).cast("long").as("nl"),
-        explode(col("langs")).as("c"))
-      .join(broadcast(ct), "c")
-      .join(cw, Seq("word", "c"), "left")
-      .select(col("word"), col("c"),
+        sort_array(collect_set(col("c"))).as("langs"))
+      .withColumn("nl", size(col("langs")).cast("long"))
+      .select(
         when(col("v") * col("nl") > 10000000L,
           raise_error(format_string(
             s"$tag: likelihood grid %dx%d exceeds the 1e7-row broadcast " +
               "bound; use a shuffled hash join on word beyond this vocabulary",
-            col("v"), col("nl"))).cast("decimal(18,8)"))
-          .otherwise(round(log((coalesce(col("cwc"), lit(0L)) + lit(1.0)) /
-            (col("tokc") + col("v").cast("double"))), 8)
-            .cast("decimal(18,8)")).as("lik"))
+            col("v"), col("nl"))).cast("long"))
+          .otherwise(col("v")).as("v"),
+        col("langs"))
+    cw.select("word").distinct()
+      .crossJoin(broadcast(shape))
+      .select(col("word"), col("v"), explode(col("langs")).as("c"))
+      .join(broadcast(ct), "c")
+      .join(cw, Seq("word", "c"), "left")
+      .select(col("word"), col("c"),
+        round(log((coalesce(col("cwc"), lit(0L)) + lit(1.0)) /
+          (col("tokc") + col("v").cast("double"))), 8)
+          .cast("decimal(18,8)").as("lik"))
+  }
 
   /** Session-scoped memo for the TRAINED NB model — the V×|langs|
     * likelihood grid + the |langs| prior row set, keyed (session, sfDir,
@@ -319,7 +323,8 @@ object TextAnalysis {
   def naiveBayes(spark: SparkSession, sfDir: String): DataFrame = {
     // per-(doc, word) counts: the scoring stream (and, on first build,
     // the training stream — no fence: the two no longer share a plan)
-    val dw = tokens(spark, sfDir).groupBy("doc_id", "lang", "word")
+    val dw = WordCount.tokens(Tables.documents(spark, sfDir))
+      .groupBy("doc_id", "lang", "word")
       .agg(count(lit(1)).as("cnt"))
     SessionMemos.arm(spark, nbModelMemo)
     val (grid, priors) = nbModelMemo.computeIfAbsent((spark, sfDir, "self"), _ => {
@@ -376,7 +381,7 @@ object TextAnalysis {
   def nbHoldout(spark: SparkSession, sfDir: String): DataFrame = {
     // per-(doc, split, word) counts: the scoring stream (and, on first
     // build, the train-band training stream — see [[nbModelMemo]])
-    val dw = tokens(spark, sfDir)
+    val dw = WordCount.tokens(Tables.documents(spark, sfDir))
       .withColumn("split", Sampling.splitCol)
       .filter(col("split") =!= "test")
       .groupBy("doc_id", "lang", "split", "word")

@@ -13,22 +13,32 @@ import org.apache.spark.sql.functions._
   * only all-to-all movement is the (word, partial-count) pairs — vocabulary-
   * sized, not corpus-sized — exactly the MR combiner optimization.
   *
+  * The global sort: when its input is small enough that AQE would read it
+  * as one partition anyway (`spark.sql.adaptive.coalescePartitions.*`), the
+  * sort runs in ONE task ([[graft.plans.SmallSortRule]]) — in the final
+  * hash-agg's reduce task once that shuffle's map outputs are known to be
+  * small, else behind a single-partition exchange — so a query is 2 jobs
+  * (map stage, reduce + sort), not 4 (map stage, range-sampling job
+  * re-running the final agg, range-shuffle map stage, sort). Past that size
+  * the sort stays a range-partitioned distributed sort.
+  *
   * Reference provenance: /root/reference is an empty checkout (SURVEY.md §0);
   * semantics follow Dean & Ghemawat OSDI'04 §2.1 word count.
   */
 object WordCount {
 
-  /** Tokenized (doc_id, lang, word) — testdata text is pre-normalized
-    * lowercase a–z + single spaces (FIXTURES.md), so tokenize = split on ' '.
+  /** Tokenized (doc_id, lang, word) of a `documents` frame — testdata text
+    * is pre-normalized lowercase a–z + single spaces (FIXTURES.md), so
+    * tokenize = split on ' '. The one tokenizer of the word-count and
+    * text-analysis operators.
     */
-  private def tokens(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("word"))
+  private[operators] def tokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"),
+      explode(split(col("text"), " ")).as("word"))
 
   /** A1–A8: full word count, ordered by count desc then word. */
   def wordCount(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir)
+    tokens(Tables.documents(spark, sfDir))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word"))
@@ -72,7 +82,7 @@ object WordCount {
 
   /** Word count per language (two-key group; shuffle on (lang, word)). */
   def perLangWordCount(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir)
+    tokens(Tables.documents(spark, sfDir))
       .groupBy("lang", "word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(asc("lang"), desc("cnt"), asc("word"))
@@ -82,7 +92,7 @@ object WordCount {
     */
   val stopwords: Seq[String] = Seq("a", "the", "of", "and", "to", "in")
   def stopwordFiltered(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir)
+    tokens(Tables.documents(spark, sfDir))
       .filter(!col("word").isin(stopwords: _*))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
@@ -90,10 +100,16 @@ object WordCount {
 
   /** Per-document term frequency, top term per doc. max over a (tf, word)
     * struct = highest tf, ties broken to the lexicographically largest word —
-    * deterministic without a second shuffle or a window.
+    * deterministic without a second shuffle or a window. Documents are
+    * range-partitioned by doc_id BEFORE tokenizing: both aggregates are then
+    * clustered already and the ORDER BY doc_id ordered already, so none of
+    * them needs an exchange, and the one shuffle moves documents, not the
+    * corpus-sized (doc_id, word) partials. The explicit partition count
+    * keeps AQE from coalescing the tokenize into one task.
     */
   def topTermPerDoc(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir)
+    tokens(Tables.documents(spark, sfDir)
+      .repartitionByRange(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id")))
       .groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
       .groupBy("doc_id")
@@ -109,7 +125,7 @@ object WordCount {
     */
   def topKUdaf(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
     import spark.implicits._
-    val counts = tokens(spark, sfDir)
+    val counts = tokens(Tables.documents(spark, sfDir))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .as[(String, Long)]
     counts.select(graft.functions.TopKWords(k).toColumn.name("arr"))

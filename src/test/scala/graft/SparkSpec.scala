@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -28,6 +30,28 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf: String = SparkSpec.sf
+
+  /** Runs `df` (collect) and returns the physical plan it actually ran:
+    * AQE's final plan, with every stage re-planned and every query-stage
+    * rule applied, rather than the initial plan `explain` shows. */
+  def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+  }
+
+  /** Runs `body` with `confs` set on the shared session, then restores
+    * each key's previous value (or unsets it). */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.reverse.foreach {
+      case (k, Some(p)) => spark.conf.set(k, p)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   override def afterAll(): Unit = spark.catalog.clearCache()
 }

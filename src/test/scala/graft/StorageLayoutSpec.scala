@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class StorageLayoutSpec extends SparkSpec {
 
-  private def withConf[A](k: String, v: String)(f: => A): A = {
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f finally prev match {
-      case Some(p) => spark.conf.set(k, p)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   test("co-bucketed fact-fact join plans with no shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("graft-bucket").toString
     Tables.lineitem(spark, sf)
@@ -31,7 +22,7 @@ class StorageLayoutSpec extends SparkSpec {
       .format("parquet").option("path", s"$wh/ob")
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("o_bucketed")
-    try withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("l_bucketed")
         .join(spark.table("o_bucketed"), col("l_orderkey") === col("o_orderkey"))
       val plan = j.queryExecution.executedPlan.toString
@@ -121,11 +112,7 @@ class StorageLayoutSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    def withAll[A](cs: Seq[(String, String)])(f: => A): A = cs match {
-      case (k, v) +: rest => withConf(k, v)(withAll(rest)(f))
-      case _ => f
-    }
-    withAll(confs) {
+    withConf(confs: _*) {
       // deterministic skew: most rows collapse onto key 0; md5 padding is
       // incompressible so the skewed partition clears the byte threshold.
       // repartition(8) gives the map side 8 tasks — AQE splits a skewed
@@ -160,11 +147,7 @@ class StorageLayoutSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    def withAll[A](cs: Seq[(String, String)])(f: => A): A = cs match {
-      case (k, v) +: rest => withConf(k, v)(withAll(rest)(f))
-      case _ => f
-    }
-    withAll(confs) {
+    withConf(confs: _*) {
       val dim = Tables.orders(spark, sf)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")

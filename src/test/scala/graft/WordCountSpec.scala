@@ -34,9 +34,29 @@ class WordCountSpec extends SparkSpec {
       .filter(perLang("cnt") =!= global("cnt")).count() == 0)
   }
 
+  test("wordCount rows arrive in ORDER BY cnt desc, word order") {
+    val rows = WordCount.wordCount(spark, sf).collect()
+      .map(r => (r.getAs[Long]("cnt"), r.getAs[String]("word"))).toSeq
+    assert(rows.nonEmpty)
+    assert(rows == rows.sortBy { case (c, w) => (-c, w) })
+  }
+
+  test("perLangWordCount rows arrive in ORDER BY lang, cnt desc, word order") {
+    val rows = WordCount.perLangWordCount(spark, sf).collect()
+      .map(r => (r.getAs[String]("lang"), r.getAs[Long]("cnt"), r.getAs[String]("word"))).toSeq
+    assert(rows.map(_._1).distinct.size > 1)
+    assert(rows == rows.sortBy { case (l, c, w) => (l, -c, w) })
+  }
+
   test("one top term per document") {
     val df = WordCount.topTermPerDoc(spark, sf)
     assert(df.count() == df.select("doc_id").distinct().count())
+  }
+
+  test("topTermPerDoc rows arrive in ORDER BY doc_id order") {
+    val ids = WordCount.topTermPerDoc(spark, sf).collect().map(_.getAs[Long]("doc_id")).toSeq
+    assert(ids.size > 1)
+    assert(ids == ids.sorted)
   }
 
   test("TopKWords Aggregator equals sort-and-limit") {
