@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SessionMemo
+
 /** Table loaders over the driver-generated parquet testdata (TESTDATA.md,
   * FIXTURES.md). All schemas are inferred from parquet footers — no DDL.
   *
@@ -26,20 +28,15 @@ object Tables {
     *
     * Correctness: the memoized schema IS the inferred schema of the same
     * immutable file (testdata is never rewritten within a session — the
-    * standing SessionMemos assumption, stated in SessionMemos.scala), so
-    * `read.schema(memo).parquet(path)` is plan-identical to inference.
-    * Keyed on (session, path) and evicted with the session like every
-    * other memo. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), org.apache.spark.sql.types.StructType]()
+    * standing [[SessionMemo]] assumption), so `read.schema(memo).parquet(path)`
+    * is plan-identical to inference. */
+  private val schemaMemo = new SessionMemo[String, org.apache.spark.sql.types.StructType]
 
   /** Parquet scan with session-memoized schema — for immutable files only
     * (the ten testdata tables and write-once artifact stores). Do NOT use
     * for paths whose schema can evolve within a session. */
   def cachedScan(spark: SparkSession, path: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, schemaMemo)
-    val sch = schemaMemo.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path).schema)
+    val sch = schemaMemo.memo(spark, path)(spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 

@@ -283,10 +283,8 @@ object Aggregates {
       .orderBy("event_type")
   }
 
-  private val kmvCubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val kmvCubeIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val kmvCubeMemo = new SessionMemo[String, String]
+  private val kmvCubeIncrMemo = new SessionMemo[String, String]
 
   /** The (event_type, day, hash) stream under the house 60-bit hash for
     * an arbitrary (normalized) events frame — shared by the one-shot
@@ -326,15 +324,11 @@ object Aggregates {
   /** Stored per-(type, day) KMV synopses — k smallest distinct hashes per
     * grain cell, built once per session (the CMS/HLL/histogram cube
     * lifecycle at k·8 bytes per cell). */
-  private[graft] def kmvCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, kmvCubeMemo)
-    kmvCubeMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-kmv-cube")
+  private[graft] def kmvCubeDir(spark: SparkSession, sfDir: String): String =
+    kmvCubeMemo.dir(spark, sfDir, "graft-kmv-cube") { dir =>
       kmvSynopsisOf(kmvHashes(spark, sfDir))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** The APPENDED store (r15 — VERDICT r14 ask #5): two user-parity
     * batches each land their own per-(type, day) k-minima segment, so
@@ -342,16 +336,12 @@ object Aggregates {
     * union-truncate merge is exercised WITHIN cells, not just across
     * days. The ≤ k−1-smaller argument above makes fold == rebuild exact,
     * so the oracle is shared verbatim with q_kmv_distinct/q_kmv_cube. */
-  private[graft] def kmvCubeIncrDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, kmvCubeIncrMemo)
-    kmvCubeIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-kmv-cube-incr")
+  private[graft] def kmvCubeIncrDir(spark: SparkSession, sfDir: String): String =
+    kmvCubeIncrMemo.dir(spark, sfDir, "graft-kmv-cube-incr") { dir =>
       val ev = Tables.events(spark, sfDir)
       appendKmvFrame(ev.filter(col("user_id") % 2 === 0), dir)
       appendKmvFrame(ev.filter(col("user_id") % 2 === 1), dir)
-      dir
-    })
-  }
+    }
 
   /** KMV CUBE, SERVED (r14) — the mergeability half of [[kmvDistinct]]'s
     * story, exercised for real: per-(type, day) k-minima synopses are
@@ -603,18 +593,15 @@ object Aggregates {
       .orderBy("w")
   }
 
-  private val cmsCubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val cmsCubeMemo = new SessionMemo[String, String]
 
   /** Build-once path for the CMS cube: per-SOURCE Count-Min cell counts
     * written once per session, partitioned by source. CMS cells are plain
     * counts — ADDITIVE, unlike HLL registers — so any source-subset
     * rollup is an exact cell-wise sum over pruned partitions and equals
     * the sketch built directly on that subset, bit for bit. */
-  private[graft] def cmsCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, cmsCubeMemo)
-    cmsCubeMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-cms-cube")
+  private[graft] def cmsCubeDir(spark: SparkSession, sfDir: String): String =
+    cmsCubeMemo.dir(spark, sfDir, "graft-cms-cube") { dir =>
       Tables.documents(spark, sfDir)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .select(col("source"), explode(array((0 until CmsDepth).map(i =>
@@ -622,9 +609,7 @@ object Aggregates {
         .groupBy(col("source"), col("rc.r").as("r"), col("rc.cell").as("cell"))
         .agg(count(lit(1)).as("c"))
         .write.partitionBy("source").mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** [[cmsWordCounts]] SERVED from the stored per-source sketch cube —
     * the exact-additivity sibling of [[hllCubeServed]] in the lifecycle
@@ -922,8 +907,7 @@ object Aggregates {
       .orderBy("k")
   }
 
-  private val quantileCubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val quantileCubeMemo = new SessionMemo[String, String]
 
   /** Build-once path for the EXACT-QUANTILE cube: per (event_type, day)
     * value HISTOGRAMS over integer cents — the third mergeable-summary
@@ -934,19 +918,15 @@ object Aggregates {
     * This is what t-digest/KLL buy approximately for unbounded domains;
     * for bounded discrete measures (cents, token counts, latencies in ms)
     * the exact histogram IS the right artifact. */
-  private[graft] def quantileCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, quantileCubeMemo)
-    quantileCubeMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-quantile-cube")
+  private[graft] def quantileCubeDir(spark: SparkSession, sfDir: String): String =
+    quantileCubeMemo.dir(spark, sfDir, "graft-quantile-cube") { dir =>
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"),
           expr("ts div 86400000000000").as("day"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
         .agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** Per-type exact p50/p95 SERVED from the stored daily histogram cube:
     * merge = one grain-keyed re-sum of cell counts (histograms are exactly
@@ -978,8 +958,7 @@ object Aggregates {
       .orderBy("event_type")
   }
 
-  private val quantileCubeIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val quantileCubeIncrMemo = new SessionMemo[String, String]
 
   /** INCREMENTAL maintenance for the exact-quantile cube — the same
     * append-only lifecycle the MV/BM25/ANN/DAU artifacts carry: the
@@ -988,10 +967,8 @@ object Aggregates {
     * disjoint writes, history never rewritten), and because histograms
     * are exactly additive the serve-time re-sum is bit-identical to the
     * single-build cube — so the query SHARES q_quantile_cube's oracle. */
-  private[graft] def quantileCubeIncrDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, quantileCubeIncrMemo)
-    quantileCubeIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-quantile-cube-incr")
+  private[graft] def quantileCubeIncrDir(spark: SparkSession, sfDir: String): String =
+    quantileCubeIncrMemo.dir(spark, sfDir, "graft-quantile-cube-incr") { dir =>
       // fenced: the max-day collect and both writes are separate jobs;
       // unpersisted after — the build frame is never read again
       val hist = graft.operators.Dedup.fence(
@@ -1008,9 +985,7 @@ object Aggregates {
         hist.filter(col("day") === maxDay)
           .write.partitionBy("day").mode("append").parquet(dir)
       } finally hist.unpersist()
-      dir
-    })
-  }
+    }
 
   /** The quantile readout served from the APPENDED cube — equality with
     * the full-rebuild oracle proves the day-partitioned artifact holds
@@ -1019,8 +994,7 @@ object Aggregates {
   def quantileCubeIncremental(spark: SparkSession, sfDir: String): DataFrame =
     serveQuantileCube(spark, quantileCubeIncrDir(spark, sfDir))
 
-  private val hllCubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val hllCubeMemo = new SessionMemo[String, String]
 
   /** Build-once path for the MERGEABLE-SKETCH cube: per (event_type, day)
     * Datasketches HLL sketches of the user_id set, written once per
@@ -1029,17 +1003,13 @@ object Aggregates {
     * are, so the cube stores sketches and any rollup (here: all days per
     * event_type) is a cheap union over the artifact, never a fact rescan.
     */
-  private[graft] def hllCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, hllCubeMemo)
-    hllCubeMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-hll-cube")
+  private[graft] def hllCubeDir(spark: SparkSession, sfDir: String): String =
+    hllCubeMemo.dir(spark, sfDir, "graft-hll-cube") { dir =>
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"), to_date(col("ts_us")).as("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sketch"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** Distinct-users-per-event-type SERVED from the stored daily sketch
     * cube: read the (event_type, day, sketch) artifact, union the daily
@@ -1078,10 +1048,8 @@ object Aggregates {
   /** DDSketch bucket base γ = (1+α)/(1−α). */
   val DDGamma: Double = (1.0 + DDAlpha) / (1.0 - DDAlpha)
 
-  private val ddCubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val ddCubeIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ddCubeMemo = new SessionMemo[String, String]
+  private val ddCubeIncrMemo = new SessionMemo[String, String]
 
   /** Build-once path for the LOG-BUCKET QUANTILE SKETCH cube (VERDICT r11
     * ask #7) — the fourth mergeable-summary species, for UNBOUNDED /
@@ -1098,29 +1066,23 @@ object Aggregates {
     * q_expectations); [[ddCubeSigned]] is the full Masson construction
     * (mirrored negative store + zero bucket) over a signed fixture.
     */
-  private[graft] def ddCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ddCubeMemo)
-    ddCubeMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-dd-cube")
+  private[graft] def ddCubeDir(spark: SparkSession, sfDir: String): String =
+    ddCubeMemo.dir(spark, sfDir, "graft-dd-cube") { dir =>
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"),
           expr("ts div 86400000000000").as("day"),
           ceil(log(col("value")) / lit(math.log(DDGamma))).cast("long").as("bucket"))
         .agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** Day-partitioned APPEND twin of [[ddCubeDir]] — the same incremental
     * lifecycle as the exact-quantile cube: history written once
     * partitioned by day, the last day appended into its own partition;
     * additivity makes the serve-time re-sum bit-identical to the single
     * build, so both forms share one oracle. */
-  private[graft] def ddCubeIncrDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ddCubeIncrMemo)
-    ddCubeIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-dd-cube-incr")
+  private[graft] def ddCubeIncrDir(spark: SparkSession, sfDir: String): String =
+    ddCubeIncrMemo.dir(spark, sfDir, "graft-dd-cube-incr") { dir =>
       val hist = graft.operators.Dedup.fence(
         Tables.events(spark, sfDir)
           .groupBy(col("event_type"),
@@ -1135,9 +1097,7 @@ object Aggregates {
         hist.filter(col("day") === maxDay)
           .write.partitionBy("day").mode("append").parquet(dir)
       } finally hist.unpersist()
-      dir
-    })
-  }
+    }
 
   /** Per-type p50/p95 SERVED from the stored log-bucket cube, with the
     * sketch's relative-error guarantee turned into a BRACKET ORACLE
@@ -1203,8 +1163,7 @@ object Aggregates {
       .orderBy("event_type")
   }
 
-  private val ddSignedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ddSignedMemo = new SessionMemo[String, String]
 
   /** The signed value stream for the signed-domain sketch: per-event net
     * cents (purchase = +cents, error = −cents — maxDrawdown's oscillating
@@ -1238,18 +1197,13 @@ object Aggregates {
 
   /** Build-once path for the signed cube — same day-grain artifact
     * lifecycle as [[ddCubeDir]]. */
-  private[graft] def ddSignedCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ddSignedMemo)
-    ddSignedMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-dd-cube-signed")
+  private[graft] def ddSignedCubeDir(spark: SparkSession, sfDir: String): String =
+    ddSignedMemo.dir(spark, sfDir, "graft-dd-cube-signed") { dir =>
       ddSignedCells(signedFlows(spark, sfDir))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
-  private val ddSignedIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ddSignedIncrMemo = new SessionMemo[String, String]
 
   /** Day-partitioned APPEND twin of [[ddSignedCubeDir]] — the same
     * incremental lifecycle as the positive cube's ([[ddCubeIncrDir]]):
@@ -1257,10 +1211,8 @@ object Aggregates {
     * its own partition; signed cells are plain counts, so additivity
     * makes the serve-time re-sum bit-identical to the single build and
     * both forms share one oracle. */
-  private[graft] def ddSignedIncrDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ddSignedIncrMemo)
-    ddSignedIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-dd-signed-incr")
+  private[graft] def ddSignedIncrDir(spark: SparkSession, sfDir: String): String =
+    ddSignedIncrMemo.dir(spark, sfDir, "graft-dd-signed-incr") { dir =>
       val hist = graft.operators.Dedup.fence(
         ddSignedCells(signedFlows(spark, sfDir)), "day")
       try {
@@ -1270,9 +1222,7 @@ object Aggregates {
         hist.filter(col("day") === maxDay)
           .write.partitionBy("day").mode("append").parquet(dir)
       } finally hist.unpersist()
-      dir
-    })
-  }
+    }
 
   /** The appended signed-cube readout — shares [[serveDdCubeSigned]] and
     * the single-build form's oracle (additivity ⇒ identical fold). */

@@ -61,12 +61,10 @@ object Curation {
     * `catalog.clearCache()`. Per-doc SCORING still runs per call — only
     * the model is shared.
     */
-  private val lmMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lmMemo = new SessionMemo[String, DataFrame]
 
-  private def lmModel(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, lmMemo)
-    lmMemo.computeIfAbsent((spark, sfDir), _ => {
+  private def lmModel(spark: SparkSession, sfDir: String): DataFrame =
+    lmMemo.memo(spark, sfDir) {
       val db = Dedup.fence(docBigrams(spark, sfDir), "doc_id")
       val c2 = db.groupBy("b").agg(sum("nb").as("c2"))
       val ch = c2.groupBy(substring_index(col("b"), " ", 1).as("w1"))
@@ -87,8 +85,7 @@ object Curation {
           round(-log((col("c2") + lit(SmoothK)) / (col("ch") + lit(SmoothK) * col("v"))), 8)
             .cast("decimal(18,8)").as("nlp"))
         .localCheckpoint()
-    })
-  }
+    }
 
   def lmPerplexity(spark: SparkSession, sfDir: String): DataFrame = {
     val db = Dedup.fence(docBigrams(spark, sfDir), "doc_id")
@@ -260,22 +257,18 @@ object Curation {
     * Apriori k=2, Apriori k=3, SON, and FP-Growth each used to rebuild —
     * and re-persist — this identical frame, so a board run paid the
     * corpus tokenize + doc_id exchange four times. One fenced frame now
-    * feeds all four (the bm25IndexDir sharing pattern, aged out with the
-    * session by SessionMemos), which is also the shared-scan reality of
-    * a production mining pass: one basket extraction, many miners. The
-    * fence's doc_id repartition is REQUIRED by Apriori's pair self-join
-    * (co-location) and by SON's doc-clustered chunk premise; FP-Growth
-    * merely reuses the cached rows. */
-  private val itemsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * feeds all four (the bm25IndexDir sharing pattern), which is also the
+    * shared-scan reality of a production mining pass: one basket
+    * extraction, many miners. The fence's doc_id repartition is REQUIRED
+    * by Apriori's pair self-join (co-location) and by SON's doc-clustered
+    * chunk premise; FP-Growth merely reuses the cached rows. */
+  private val itemsMemo = new SessionMemo[String, DataFrame]
 
-  private def distinctItems(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, itemsMemo)
-    itemsMemo.computeIfAbsent((spark, sfDir), _ =>
+  private def distinctItems(spark: SparkSession, sfDir: String): DataFrame =
+    itemsMemo.memo(spark, sfDir)(
       Dedup.fence(Tables.documents(spark, sfDir).select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("word"))
         .filter(col("word") =!= ""), "doc_id"))
-  }
 
   /** Session-scoped memos for the rest of the SHARED frequent-itemset
     * base (r17, VERDICT r16 ask #2 — "share the transaction /
@@ -290,34 +283,25 @@ object Curation {
     * stays floor-bounded (≤ AssocSupDenom × avg items/doc entries),
     * corpus-independent. Changes no result: every consumer already
     * collected exactly these values. */
-  private val ndMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-  private val freqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[String, Long]]()
-  private val pairMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[Long, Long]]()
-  private val sonMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Set[String], Array[String])]()
+  private val ndMemo = new SessionMemo[String, Long]
+  private val freqMemo = new SessionMemo[String, Map[String, Long]]
+  private val pairMemo = new SessionMemo[String, Map[Long, Long]]
+  private val sonMemo = new SessionMemo[String, (Set[String], Array[String])]
 
-  private def nDocsOf(spark: SparkSession, sfDir: String): Long = {
-    SessionMemos.arm(spark, ndMemo)
-    ndMemo.computeIfAbsent((spark, sfDir),
-      _ => Tables.documents(spark, sfDir).count()).longValue()
-  }
+  private def nDocsOf(spark: SparkSession, sfDir: String): Long =
+    ndMemo.memo(spark, sfDir)(Tables.documents(spark, sfDir).count())
 
   /** Frequent words at the [[AssocSupDenom]] floor with their exact
     * global supports — the frequent-1-itemset table every miner starts
     * from. */
-  private def freqWordSupports(spark: SparkSession, sfDir: String): Map[String, Long] = {
-    SessionMemos.arm(spark, freqMemo)
-    freqMemo.computeIfAbsent((spark, sfDir), _ => {
+  private def freqWordSupports(spark: SparkSession, sfDir: String): Map[String, Long] =
+    freqMemo.memo(spark, sfDir) {
       val nd = nDocsOf(spark, sfDir)
       distinctItems(spark, sfDir).groupBy("word")
         .agg(count(lit(1)).as("supp"))
         .filter(col("supp") * AssocSupDenom >= lit(nd))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    })
-  }
+    }
 
   /** Association-rule mining (Agrawal & Srikant's Apriori at k=2): which
     * word's presence in a document predicts another's — support /
@@ -435,8 +419,7 @@ object Curation {
     // frequent-1 table — memoized per (session, sfDir) (r17), so reps
     // after the first skip the pair self-join + collect and pay only the
     // triple pass (the k=3 work this query actually demonstrates)
-    SessionMemos.arm(spark, pairMemo)
-    val pairMap: Map[Long, Long] = pairMemo.computeIfAbsent((spark, sfDir), _ =>
+    val pairMap: Map[Long, Long] = pairMemo.memo(spark, sfDir)(
       fitems.select(col("doc_id"), col("i").as("a"))
         .join(fitems.select(col("doc_id"), col("i").as("b")), "doc_id")
         .filter(col("a") < col("b"))
@@ -681,9 +664,8 @@ object Curation {
     }.collect().distinct
     (aWords, candKeys)
     }
-    SessionMemos.arm(spark, sonMemo)
     val (aWords, candKeys) =
-      sonMemo.computeIfAbsent((spark, sfDir), _ => minePasses())
+      sonMemo.memo(spark, sfDir)(minePasses())
     if (aWords.isEmpty || candKeys.isEmpty) return emptyRules2(spark)
     // PASS 3: exact global counts — word supports from the family memo
     // ([[freqWordSupports]]: SON's exact recount over A-words equals the
@@ -1277,15 +1259,13 @@ object Curation {
     * stored-sketch contract as `q_hll_cube`'s hllCubeMemo (r10,
     * judge-sanctioned). The EXACT-distinct verification arm stays
     * per-invocation, so every serve still pays a full corpus pass. */
-  private val profileSketchMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val profileSketchMemo = new SessionMemo[String, DataFrame]
 
   def profileOrdersApprox(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
     def nn(c: String) = count(col(c))
     def hll(c: String) = approx_count_distinct(col(c), 0.02)
-    SessionMemos.arm(spark, profileSketchMemo)
-    val sketch = profileSketchMemo.computeIfAbsent((spark, sfDir), _ => o.agg(
+    val sketch = profileSketchMemo.memo(spark, sfDir)(o.agg(
       count(lit(1)).as("n"),
       nn("o_orderkey").as("nn_key"), hll("o_orderkey").as("hd_key"),
       min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),

@@ -620,19 +620,16 @@ object Dedup {
     * frames go through [[connectedComponents]] directly, which does NOT
     * memoize.
     */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val clusterMemo = new SessionMemo[String, DataFrame]
 
   /** [[neardupClusters]] without the presentation sort, for plan-internal
     * consumers ([[Pipeline.keepSetNearDup]]'s loser anti join). Served
     * from [[clusterMemo]], so all consumers in a session share ONE
     * candidate-generation + components run.
     */
-  private[operators] def neardupClustersRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, clusterMemo)
-    clusterMemo.computeIfAbsent((spark, sfDir),
-      _ => connectedComponents(minhashPairsRaw(spark, sfDir).select("doc_a", "doc_b")))
-  }
+  private[operators] def neardupClustersRaw(spark: SparkSession, sfDir: String): DataFrame =
+    clusterMemo.memo(spark, sfDir)(
+      connectedComponents(minhashPairsRaw(spark, sfDir).select("doc_a", "doc_b")))
 
   /** Connected components over an ARBITRARY undirected pair frame
     * (doc_a, doc_b) — the reusable core of [[neardupClusters]], callable on
@@ -941,14 +938,11 @@ object Dedup {
     * pair generation + iterative component loop every rep. Both maps are
     * deterministic and checkpoint-truncated by [[connectedComponents]];
     * the k-parameterized ScaleCurve sibling below stays unmemoized. */
-  private val embClusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val embTightClusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val embClusterMemo = new SessionMemo[String, DataFrame]
+  private val embTightClusterMemo = new SessionMemo[String, DataFrame]
 
   def embeddingClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, embClusterMemo)
-    val comps = embClusterMemo.computeIfAbsent((spark, sfDir), _ =>
+    val comps = embClusterMemo.memo(spark, sfDir)(
       connectedComponents(embeddingPairsClusteredRaw(spark, sfDir)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
     comps.select(col("doc_id").as("vec_id"), col("cluster"), col("is_survivor"))
@@ -1051,8 +1045,7 @@ object Dedup {
     * q_neardup_clusters' oracle).
     */
   def embeddingClustersTight(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, embTightClusterMemo)
-    val comps = embTightClusterMemo.computeIfAbsent((spark, sfDir), _ =>
+    val comps = embTightClusterMemo.memo(spark, sfDir)(
       connectedComponents(embeddingPairsTightRaw(vectorsWithSig(spark, sfDir))
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
     // the singleton COALESCE only needs the id column — read it straight

@@ -689,20 +689,17 @@ object Funnels {
     * physically separate writes into disjoint day partitions, exactly how
     * a nightly job maintains the artifact (appends never rewrite history).
     * The cutoff scalar is one bounded single-row-aggregate collect,
-    * memoized ([[graft.operators.SessionMemos]]).
+    * memoized.
     */
-  private val dayUserStoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val dayUserStoreMemo = new SessionMemo[String, String]
 
-  private[graft] def dayUserStore(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, dayUserStoreMemo)
-    dayUserStoreMemo.computeIfAbsent((spark, sfDir), _ => {
+  private[graft] def dayUserStore(spark: SparkSession, sfDir: String): String =
+    dayUserStoreMemo.dir(spark, sfDir, "graft-dau-frame") { dir =>
       // fenced: the max-day collect and the two writes are three separate
       // JOBS — unfenced they would each rescan events and redo the
       // distinct (exchange reuse never applies across jobs; review r11).
       // Unpersisted after: the build frame is never read again.
       val ud = Dedup.fence(dayUserFrame(spark, sfDir), "day")
-      val dir = SessionMemos.tempDir(spark, "graft-dau-frame")
       try {
         val maxDay = ud.agg(max("day")).head.getLong(0)
         ud.filter(col("day") < maxDay)
@@ -710,9 +707,7 @@ object Funnels {
         ud.filter(col("day") === maxDay)
           .write.partitionBy("day").mode("append").parquet(dir)
       } finally ud.unpersist()
-      dir
-    })
-  }
+    }
 
   /** INCREMENTAL rolling DAU (the maintenance shape [[rollingDau]]'s
     * scaladoc promises): serve DAU/WAU/stickiness purely from the stored

@@ -135,8 +135,7 @@ object Layout {
       .agg(min("l_partkey").as("p_min"), max("l_partkey").as("p_max"),
         min("l_suppkey").as("s_min"), max("l_suppkey").as("s_max"))
 
-  private val compactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+  private val compactMemo = new SessionMemo[String, (String, String)]
 
   /** SMALL-FILE COMPACTION (r12) — the OPTIMIZE/bin-packing primitive
     * every lakehouse table needs at 100 TB: streaming ingest leaves each
@@ -155,8 +154,7 @@ object Layout {
     * the same rows).
     */
   def compactionReport(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, compactMemo)
-    val (fragDir, compactDir) = compactMemo.computeIfAbsent((spark, sfDir), _ => {
+    val (fragDir, compactDir) = compactMemo.memo(spark, sfDir) {
       val frag = SessionMemos.tempDir(spark, "graft-compact-frag")
       val comp = SessionMemos.tempDir(spark, "graft-compact-out")
       val ev = Tables.events(spark, sfDir)
@@ -167,7 +165,7 @@ object Layout {
         .repartition(col("day"))
         .write.partitionBy("day").mode("overwrite").parquet(comp)
       (frag, comp)
-    })
+    }
     val before = filesPerDay(spark, fragDir).select(col("day"), col("n_files").as("nf_before"))
     val after = filesPerDay(spark, compactDir).select(col("day"), col("n_files").as("nf_after"))
     val content = spark.read.parquet(compactDir)
@@ -191,8 +189,7 @@ object Layout {
       .toDF("day", "n_files")
   }
 
-  private val binpackMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, Long)]()
+  private val binpackMemo = new SessionMemo[String, (String, Long)]
 
   /** SIZE-TARGETED COMPACTION (r13, VERDICT r12 ask #5) — the bin-packing
     * form that does NOT re-fragment at 100 TB day sizes: one file per
@@ -212,8 +209,7 @@ object Layout {
     * embarrassingly parallel, idempotent on re-run.
     */
   def compactionBinpack(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, binpackMemo)
-    val (dir, target) = binpackMemo.computeIfAbsent((spark, sfDir), _ => {
+    val (dir, target) = binpackMemo.memo(spark, sfDir) {
       val out = SessionMemos.tempDir(spark, "graft-compact-binpack")
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), expr("ts div 86400000000000").as("day"),
@@ -223,7 +219,7 @@ object Layout {
         .write.option("maxRecordsPerFile", tgt)
         .partitionBy("day").mode("overwrite").parquet(out)
       (out, tgt)
-    })
+    }
     val content = spark.read.parquet(dir)
       .groupBy(col("day").cast("long").as("day"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))

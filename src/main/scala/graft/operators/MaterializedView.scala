@@ -33,10 +33,8 @@ import graft.plans.{MvRegistry, MvRewriteRule}
   */
 object MaterializedView {
 
-  /** (session, sfDir) → cube directory; end-of-session eviction via
-    * [[SessionMemos]] (no-rewrite assumption documented there). */
-  private val cubeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** (session, sfDir) → cube directory. */
+  private val cubeMemo = new SessionMemo[String, String]
 
   private def factPath(sfDir: String): String = s"$sfDir/lineitem.parquet"
 
@@ -44,15 +42,13 @@ object MaterializedView {
     * fact→cube mapping in [[MvRegistry]], arm the rewrite rule on
     * sessions built without `spark.sql.extensions=graft.GraftExtensions`,
     * and return the cube directory. */
-  private[graft] def cubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, cubeMemo)
-    cubeMemo.computeIfAbsent((spark, sfDir), _ => {
+  private[graft] def cubeDir(spark: SparkSession, sfDir: String): String =
+    cubeMemo.dir(spark, sfDir, "graft-mv-cube") { dir =>
       if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ MvRewriteRule
 
       val fact = Tables.lineitem(spark, sfDir)
-      val dir = SessionMemos.tempDir(spark, "graft-mv-cube")
       fact.groupBy(
           col("l_returnflag"), col("l_linestatus"),
           year(col("l_shipdate")).as("ship_year"))
@@ -94,9 +90,7 @@ object MaterializedView {
         measures = Seq(templates(3) -> "qty_s", templates(4) -> "price_s",
           templates(5) -> "disc_s"),
         cntCol = "cnt"))
-      dir
-    })
-  }
+    }
 
   /** The marked fact scan the rewrite rule recognizes (`graft.mv` rides
     * HadoopFsRelation.options — see MvRewriteRule's OPT-IN MARKER note). */
@@ -146,8 +140,7 @@ object MaterializedView {
   }
 
   /** (session, sfDir) → incremental-segment cube directory. */
-  private val incrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val incrMemo = new SessionMemo[String, String]
 
   /** Append one fact batch's cube PARTIALS to the standing segment store
     * at `dir` — the view-maintenance delta: only the batch is scanned,
@@ -177,17 +170,13 @@ object MaterializedView {
       .withColumn("batch", lit(batchId))
       .write.mode("append").parquet(dir)
 
-  private[graft] def incrCubeDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, incrMemo)
-    incrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-mv-incr")
+  private[graft] def incrCubeDir(spark: SparkSession, sfDir: String): String =
+    incrMemo.dir(spark, sfDir, "graft-mv-incr") { dir =>
       // two deterministic fact batches (even / odd order keys): the first
       // write creates the segment store, the second is a pure append
       appendCubeBatch(spark, sfDir, dir, 0)
       appendCubeBatch(spark, sfDir, dir, 1)
-      dir
-    })
-  }
+    }
 
   /** Fold stored per-segment partials to the full-grain serving frame —
     * exact because DECIMAL partial sums and row counts are

@@ -80,13 +80,11 @@ object Multimodal {
     * train time, so the memoized doubles are the bit-identical `centroid`
     * values the r16 per-invocation aggregate produced.
     */
-  private val langCentroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[(String, Long, Double)]]()
+  private val langCentroidMemo = new SessionMemo[String, Seq[(String, Long, Double)]]
 
   private[operators] def trainedLangCentroids(spark: SparkSession,
                                               sfDir: String): Seq[(String, Long, Double)] = {
-    SessionMemos.arm(spark, langCentroidMemo)
-    langCentroidMemo.computeIfAbsent((spark, sfDir), _ => {
+    langCentroidMemo.memo(spark, sfDir) {
       val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("lang"))
       val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
       d.join(e, col("doc_id") === col("vec_id"))
@@ -98,7 +96,7 @@ object Multimodal {
           round(col("c"), 6).as("centroid"))
         .collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    })
+    }
   }
 
   def langCentroids(spark: SparkSession, sfDir: String): DataFrame = {

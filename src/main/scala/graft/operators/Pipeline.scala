@@ -114,23 +114,18 @@ object Pipeline {
     * re-derived the full keep-set plan on top of q_pipeline_keep's, and
     * q_pipeline_substr re-derived all five curated stages on top of
     * q_pipeline_curated's. Checkpoint-truncated one-narrow-row-per-
-    * surviving-doc frames (the clusterMemo contract), aged out with the
-    * session by SessionMemos. */
-  private val keepMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val curatedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * surviving-doc frames (the clusterMemo contract). */
+  private val keepMemo = new SessionMemo[String, DataFrame]
+  private val curatedMemo = new SessionMemo[String, DataFrame]
 
   /** [[keepSet]] without the presentation sort, served from [[keepMemo]]. */
-  private def keepRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, keepMemo)
-    keepMemo.computeIfAbsent((spark, sfDir), _ =>
+  private def keepRaw(spark: SparkSession, sfDir: String): DataFrame =
+    keepMemo.memo(spark, sfDir)(
       decontaminate(spark, sfDir)
         .join(survivorsFrame(spark, sfDir), Seq("doc_id"), "left_semi")
         .join(qualityFloorFrame(spark, sfDir).select("doc_id", "quality"), "doc_id")
         .select(col("doc_id"), col("quality"))
         .localCheckpoint())
-  }
 
   def keepSet(spark: SparkSession, sfDir: String): DataFrame =
     keepRaw(spark, sfDir).orderBy("doc_id")
@@ -201,9 +196,8 @@ object Pipeline {
   /** [[curatedKeepSet]] without the presentation sort, served from
     * [[curatedMemo]] — the materialized curated keep list
     * q_pipeline_curated and q_pipeline_substr both read. */
-  private def curatedRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, curatedMemo)
-    curatedMemo.computeIfAbsent((spark, sfDir), _ => {
+  private def curatedRaw(spark: SparkSession, sfDir: String): DataFrame =
+    curatedMemo.memo(spark, sfDir) {
       // the quality stage already carries n_tokens (same split-size
       // expression) — the length band rides it, no second tokenize pass
       val qualityAndLen = qualityFloorFrame(spark, sfDir)
@@ -219,8 +213,7 @@ object Pipeline {
         .join(lm, "doc_id")
         .select(col("doc_id"), col("quality"), col("avg_nll"), col("n_tokens"))
         .localCheckpoint()
-    })
-  }
+    }
 
   /** Duplicated-content budget for [[curatedSubstrKeepSet]]: a document
     * whose tokens are MAJORITY-covered by duplicated spans (≥ 500 000

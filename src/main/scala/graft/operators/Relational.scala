@@ -748,14 +748,12 @@ object Relational {
     * day cutoff that defines the append batch. The cutoff scalar is one
     * bounded (single-row aggregate) driver collect at build time, then a
     * memoized constant, so the serve-time delta filter is a pushed-down
-    * literal predicate. No-rewrite assumption: [[graft.operators.SessionMemos]].
+    * literal predicate.
     */
-  private val scd2DimMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, Long)]()
+  private val scd2DimMemo = new SessionMemo[String, (String, Long)]
 
-  private[graft] def scd2DimStore(spark: SparkSession, sfDir: String): (String, Long) = {
-    SessionMemos.arm(spark, scd2DimMemo)
-    scd2DimMemo.computeIfAbsent((spark, sfDir), _ => {
+  private[graft] def scd2DimStore(spark: SparkSession, sfDir: String): (String, Long) =
+    scd2DimMemo.memo(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), col("ts_sec"))
       val maxSec = ev.agg(max("ts_sec")).head.getLong(0)
@@ -763,8 +761,7 @@ object Relational {
       val dir = SessionMemos.tempDir(spark, "graft-scd2-dim")
       scd2Fold(ev.filter(col("ts_sec") < cutoff)).write.mode("overwrite").parquet(dir)
       (dir, cutoff)
-    })
-  }
+    }
 
   /** SCD2 INCREMENTAL MAINTENANCE — append one day's change feed to the
     * stored dimension and serve the merged result, hash-checked against
@@ -953,8 +950,7 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
-  private val nationMapMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[Int, String]]()
+  private val nationMapMemo = new SessionMemo[String, Map[Int, String]]
 
   /** JOIN ELIMINATION via literal-map decode: the per-nation customer
     * rollup WITHOUT any join operator — the 25-row nation dimension
@@ -974,8 +970,7 @@ object Relational {
     * the operator must not depend on it).
     */
   def dimDecode(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, nationMapMemo)
-    val m = nationMapMemo.computeIfAbsent((spark, sfDir), _ =>
+    val m = nationMapMemo.memo(spark, sfDir)(
       Tables.nation(spark, sfDir).select("n_nationkey", "n_name")
         .collect().map(r => r.getInt(0) -> r.getString(1)).toMap)
     Tables.customer(spark, sfDir)

@@ -40,21 +40,19 @@ object Similarity {
     * contract, asserted in SimilaritySpec) while the blocks — written on
     * first action, 65 doubles per vector — survive
     * `catalog.clearCache()` and serve every later consumer in the
-    * session. No-rewrite-within-session assumption: [[SessionMemos]]. */
-  private val vectorsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * session. */
+  private val vectorsMemo = new SessionMemo[String, DataFrame]
 
   private def vectors(spark: SparkSession, sfDir: String, idCol: String,
                       vCol: String, nCol: String): DataFrame = {
-    SessionMemos.arm(spark, vectorsMemo)
-    val base = vectorsMemo.computeIfAbsent((spark, sfDir), _ => {
+    val base = vectorsMemo.memo(spark, sfDir) {
       val v = col("embedding").cast("array<double>")
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), v.as("v"),
           graft.functions.VectorFunctions.dot(v, v).as("nn"))
         .repartition(col("vec_id")) // co-partition self-join sides, as fence did
         .localCheckpoint(false) // lazy: no job at plan-build time
-    })
+    }
     base.select(col("vec_id").as(idCol), col("v").as(vCol), col("nn").as(nCol))
   }
 
@@ -248,10 +246,8 @@ object Similarity {
       .select(col("q_id"), col("rn").cast("long").as("rn"), col("vec_id"), col("dist"))
       .orderBy("q_id", "rn")
 
-  private val ivfIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val ivfIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ivfIndexMemo = new SessionMemo[String, String]
+  private val ivfIncrMemo = new SessionMemo[String, String]
 
   /** Append ONE embedding batch to a stored IVF index: rows carry the
     * batch's quantized vectors with their map-side cluster assignment
@@ -274,25 +270,17 @@ object Similarity {
       .write.mode("append").parquet(dir)
   }
 
-  private[graft] def ivfIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ivfIndexMemo)
-    ivfIndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-ivf-index")
+  private[graft] def ivfIndexDir(spark: SparkSession, sfDir: String): String =
+    ivfIndexMemo.dir(spark, sfDir, "graft-ivf-index") { dir =>
       appendIvfFrame(spark, sfDir, Tables.embeddings(spark, sfDir), dir, 0L)
-      dir
-    })
-  }
+    }
 
-  private[graft] def ivfIncrIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ivfIncrMemo)
-    ivfIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-ivf-index-incr")
+  private[graft] def ivfIncrIndexDir(spark: SparkSession, sfDir: String): String =
+    ivfIncrMemo.dir(spark, sfDir, "graft-ivf-index-incr") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       appendIvfFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 0), dir, 0L)
       appendIvfFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 1), dir, 1L)
-      dir
-    })
-  }
+    }
 
   /** Serve the IVF ranking off a STORED index dir — the lifecycle form
     * ([[annServed]]'s shape for the IVF family): the corpus side reads
@@ -418,21 +406,15 @@ object Similarity {
     * directory holding the BUCKET-PARTITIONED sign-LSH index — one row
     * per vector (vec_id, v, nn) under its 4-plane signature's partition,
     * written once per session. The signature computation (the indexed
-    * artifact) runs at build time only; serving reads stored buckets.
-    * No-rewrite assumption: [[SessionMemos]]. */
-  private val annIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    * artifact) runs at build time only; serving reads stored buckets. */
+  private val annIndexMemo = new SessionMemo[String, String]
 
-  private def annIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, annIndexMemo)
-    annIndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-ann-index")
+  private def annIndexDir(spark: SparkSession, sfDir: String): String =
+    annIndexMemo.dir(spark, sfDir, "graft-ann-index") { dir =>
       vectors(spark, sfDir, "vec_id", "v", "nn")
         .withColumn("bucket", signBucket(col("v")))
         .write.partitionBy("bucket").mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** The 4-plane sign bucket of a 64-d double vector column — the ONE
     * bucket definition every LSH surface (in-plan, stored, incremental,
@@ -454,20 +436,14 @@ object Similarity {
     * serve-time recompute at all: new vectors hash into the same bucket
     * space, land in their buckets' partitions, and are immediately
     * servable next to the old segments. That is why production vector
-    * indexes absorb streaming upserts so cheaply. No-rewrite assumption:
-    * [[SessionMemos]]. */
-  private val annIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    * indexes absorb streaming upserts so cheaply. */
+  private val annIncrMemo = new SessionMemo[String, String]
 
-  private[graft] def annIncrIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, annIncrMemo)
-    annIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-ann-incr")
+  private[graft] def annIncrIndexDir(spark: SparkSession, sfDir: String): String =
+    annIncrMemo.dir(spark, sfDir, "graft-ann-incr") { dir =>
       appendAnnBatch(spark, sfDir, dir, 0)
       appendAnnBatch(spark, sfDir, dir, 1)
-      dir
-    })
-  }
+    }
 
   /** Append one batch's (vec_id, v, nn, batch) rows under their sign
     * buckets. Package-private so StorageLayoutSpec drives the lifecycle
@@ -759,14 +735,10 @@ object Similarity {
     * query (registry enumeration, bench plan build) costs nothing
     * (ADVICE r15: the prior form localCheckpointed + count()ed at
     * DataFrame construction time). */
-  private val l2TopKMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+  private val l2TopKMemo = new SessionMemo[(String, Int), DataFrame]
 
-  private[graft] def l2TopKCached(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    SessionMemos.arm(spark, l2TopKMemo)
-    l2TopKMemo.computeIfAbsent((spark, sfDir, k),
-      _ => l2TopK(spark, sfDir, k).persist())
-  }
+  private[graft] def l2TopKCached(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    l2TopKMemo.memo(spark, (sfDir, k))(l2TopK(spark, sfDir, k).persist())
 
   /** PROBE-WIDTH TUNING CURVE (`q_ivf_probe_curve`) — the dial a vector
     * serving team actually turns: recall@k against exact integer L2 at
@@ -1069,8 +1041,7 @@ object Similarity {
   /** Session memo for the PROJECTED-SPACE coarse centroids (k×16 longs —
     * bounded driver state; deterministic trainer, so memoizing changes
     * nothing but job count). */
-  private val jlCentMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[Array[Long]]]()
+  private val jlCentMemo = new SessionMemo[String, IndexedSeq[Array[Long]]]
 
   /** [[KmeansK]] centroids trained by the SAME deterministic integer
     * Lloyd as [[trainedCentroids]], but in the 16-dim JL-projected space
@@ -1078,12 +1049,10 @@ object Similarity {
     * whole k-means machinery reuses verbatim; per-round distances cost
     * 16 terms instead of 64. Negative coordinates are fine: both engines
     * truncate integer division toward zero, so the half-up mean replays. */
-  private[graft] def jlCentroids(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] = {
-    SessionMemos.arm(spark, jlCentMemo)
-    jlCentMemo.computeIfAbsent((spark, sfDir), _ =>
+  private[graft] def jlCentroids(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] =
+    jlCentMemo.memo(spark, sfDir)(
       trainCentroids(quantizedVectors(Tables.embeddings(spark, sfDir))
         .select(col("vec_id"), jlProjCol.as("qv")), KmeansSeedLowestId))
-  }
 
   /** JL-COMPOSED IVF SERVING (r15 — VERDICT r14 ask #6): the pipeline
     * [[randProjPairs]]'s 16-dim sketch exists to justify, measured end
@@ -1186,14 +1155,11 @@ object Similarity {
   /** Session memo for the trained PQ codebook matrix — M×Ks subvector
     * centroids, indexed sub·Ks+code (8×16×8 longs: bounded driver
     * state). Deterministic trainer → memoizing changes no result. */
-  private val pqCodebookMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[Array[Long]]]()
+  private val pqCodebookMemo = new SessionMemo[String, IndexedSeq[Array[Long]]]
 
-  private[graft] def pqCodebooks(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] = {
-    SessionMemos.arm(spark, pqCodebookMemo)
-    pqCodebookMemo.computeIfAbsent((spark, sfDir),
-      _ => trainPqCodebooks(quantizedVectors(Tables.embeddings(spark, sfDir))))
-  }
+  private[graft] def pqCodebooks(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] =
+    pqCodebookMemo.memo(spark, sfDir)(
+      trainPqCodebooks(quantizedVectors(Tables.embeddings(spark, sfDir))))
 
   /** Squared L2 between a subvector column and one literal codebook row. */
   private def pqSqDist(v8: Column, cent: Column): Column =
@@ -1414,8 +1380,7 @@ object Similarity {
       .orderBy("q_id", "rn")
   }
 
-  private val ivfPqIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ivfPqIncrMemo = new SessionMemo[String, String]
 
   /** Append one embedding batch's IVFADC index segment: (vec_id, cluster,
     * codes, batch) — cluster under the trained coarse quantizer, 8 byte
@@ -1438,16 +1403,12 @@ object Similarity {
       .write.mode("append").parquet(dir)
   }
 
-  private[graft] def ivfPqIncrIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, ivfPqIncrMemo)
-    ivfPqIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-ivfpq-index")
+  private[graft] def ivfPqIncrIndexDir(spark: SparkSession, sfDir: String): String =
+    ivfPqIncrMemo.dir(spark, sfDir, "graft-ivfpq-index") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       appendIvfPqFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 0), dir, 0L)
       appendIvfPqFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 1), dir, 1L)
-      dir
-    })
-  }
+    }
 
   /** `q_ivfpq_incremental` (r16): the appendable lifecycle for the
     * compressed index — batches land (cluster, codes) segments under the
@@ -1471,8 +1432,7 @@ object Similarity {
 
   /** Session memo for the RESIDUAL PQ codebooks — same bounded driver
     * state as [[pqCodebookMemo]], trained on r = x − centroid(x). */
-  private val pqResCodebookMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[Array[Long]]]()
+  private val pqResCodebookMemo = new SessionMemo[String, IndexedSeq[Array[Long]]]
 
   /** Each corpus vector's coarse assignment under the SHARED trained
     * quantizer and its exact integer residual r = qv − centroid(cluster)
@@ -1490,12 +1450,10 @@ object Similarity {
           element_at(centLit, (col("cluster") + 1).cast("int"))).as("rv"))
   }
 
-  private[graft] def pqResCodebooks(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] = {
-    SessionMemos.arm(spark, pqResCodebookMemo)
-    pqResCodebookMemo.computeIfAbsent((spark, sfDir),
-      _ => trainPqCodebooks(
+  private[graft] def pqResCodebooks(spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] =
+    pqResCodebookMemo.memo(spark, sfDir)(
+      trainPqCodebooks(
         residualVectors(spark, sfDir).select(col("vec_id"), col("rv").as("qv"))))
-  }
 
   /** RESIDUAL IVFADC (`q_ivfpq_residual`, r16 — VERDICT r15 ask #4): the
     * production FAISS default (`by_residual=true`) next to
@@ -1852,8 +1810,7 @@ object Similarity {
     * Spec-planted corpora go through [[kmeansAssignedFrom]], which does
     * NOT memoize (the frame, not the path, is the cache key there).
     */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), IndexedSeq[Array[Long]]]()
+  private val centroidMemo = new SessionMemo[(String, String), IndexedSeq[Array[Long]]]
 
   /** [[kmeans]] without the presentation projection/sort — the assignment
     * feed for [[semDedup]] and the cluster-local embedding pair graph
@@ -1873,9 +1830,8 @@ object Similarity {
                                           seeding: String = KmeansSeedLowestId,
                                           k: Int = KmeansK,
                                           memoTag: String = ""): IndexedSeq[Array[Long]] = {
-    SessionMemos.arm(spark, centroidMemo)
-    centroidMemo.computeIfAbsent((spark, sfDir, s"$seeding#k=$k$memoTag"),
-      _ => trainCentroids(quantizedVectors(Tables.embeddings(spark, sfDir)), seeding, k))
+    centroidMemo.memo(spark, (sfDir, s"$seeding#k=$k$memoTag"))(
+      trainCentroids(quantizedVectors(Tables.embeddings(spark, sfDir)), seeding, k))
   }
 
   /** The (vec_id, v, nn, cluster) frame every embedding-cluster consumer
@@ -2109,8 +2065,7 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  private val semIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val semIncrMemo = new SessionMemo[String, String]
 
   /** Append one embedding batch's SemDeDup index segment: (vec_id, v, nn,
     * cluster, batch) — every column a PER-ROW fact of the batch under the
@@ -2132,16 +2087,12 @@ object Similarity {
       .write.mode("append").parquet(dir)
   }
 
-  private[graft] def semIncrIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, semIncrMemo)
-    semIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-semdedup-index")
+  private[graft] def semIncrIndexDir(spark: SparkSession, sfDir: String): String =
+    semIncrMemo.dir(spark, sfDir, "graft-semdedup-index") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       appendSemFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 0), dir, 0L)
       appendSemFrame(spark, sfDir, emb.filter(col("vec_id") % 2 === 1), dir, 1L)
-      dir
-    })
-  }
+    }
 
   /** `q_semdedup_incremental` (r16): the build-once/append/serve lifecycle
     * for the LAST dedup family without one — semantic dedup. Batches land
@@ -2451,14 +2402,10 @@ object Similarity {
   /** Session-scoped memo for the trained eigenvector (64 longs per
     * (session, sfDir) — bounded driver state; the trainer is
     * deterministic so memoization changes nothing but job count). */
-  private val pc1Memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
+  private val pc1Memo = new SessionMemo[String, Array[Long]]
 
-  private[graft] def trainedPc1(spark: SparkSession, sfDir: String): Array[Long] = {
-    SessionMemos.arm(spark, pc1Memo)
-    pc1Memo.computeIfAbsent((spark, sfDir),
-      _ => trainPc1Rounds(spark, sfDir, PcaRounds))
-  }
+  private[graft] def trainedPc1(spark: SparkSession, sfDir: String): Array[Long] =
+    pc1Memo.memo(spark, sfDir)(trainPc1Rounds(spark, sfDir, PcaRounds))
 
   /** Round-parameterized trainer (package-private, un-memoized):
     * SimilaritySpec measures the round-(R−1)→R loading drift with it. */
@@ -2484,15 +2431,11 @@ object Similarity {
     * the persisted frame used to be rebuilt (and re-persisted) by every
     * caller, so one session running q_pca_power + q_pca_scores +
     * q_pca_cov accumulated 4+ cached copies of the centered corpus; one
-    * memoized frame now feeds every spectral consumer and ages out with
-    * the session like every other trained artifact. */
-  private val deltasMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * memoized frame now feeds every spectral consumer. */
+  private val deltasMemo = new SessionMemo[String, DataFrame]
 
-  private def pcaDeltas(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, deltasMemo)
-    deltasMemo.computeIfAbsent((spark, sfDir), _ => pcaDeltasBuild(spark, sfDir))
-  }
+  private def pcaDeltas(spark: SparkSession, sfDir: String): DataFrame =
+    deltasMemo.memo(spark, sfDir)(pcaDeltasBuild(spark, sfDir))
 
   /** The UNFENCED micro-unit corpus the PCA family runs on — same
     * quantization expression as quantizedVectors, but WITHOUT its fence:
@@ -2567,14 +2510,10 @@ object Similarity {
   val Pc2Rounds = 32
 
   /** Session memo for the PC2 iterate (64 longs — bounded driver state). */
-  private val pc2Memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
+  private val pc2Memo = new SessionMemo[String, Array[Long]]
 
-  private[graft] def trainedPc2(spark: SparkSession, sfDir: String): Array[Long] = {
-    SessionMemos.arm(spark, pc2Memo)
-    pc2Memo.computeIfAbsent((spark, sfDir),
-      _ => trainPc2Rounds(spark, sfDir, Pc2Rounds))
-  }
+  private[graft] def trainedPc2(spark: SparkSession, sfDir: String): Array[Long] =
+    pc2Memo.memo(spark, sfDir)(trainPc2Rounds(spark, sfDir, Pc2Rounds))
 
   /** Truncating division on the POSITIVE magnitude, sign restored — the
     * construction every PCA division uses so Spark/BigInt (truncate
@@ -2689,8 +2628,7 @@ object Similarity {
         element_at(typedlit(jIdx), col("pos") + 1).as("j"), col("s"))
   }
 
-  private val covIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val covIncrMemo = new SessionMemo[String, String]
 
   /** INCREMENTAL COVARIANCE MAINTENANCE (r14) — the spectral model joins
     * the build-once/append/serve lifecycle every sketch cube already has:
@@ -2707,24 +2645,20 @@ object Similarity {
     * [[pcaCovRecentered]] (raw moments, re-centered exactly at serve).
     */
   def pcaCovIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, covIncrMemo)
-    val dir = covIncrMemo.computeIfAbsent((spark, sfDir), _ => {
-      val d = SessionMemos.tempDir(spark, "graft-pca-cov-incr")
+    val dir = covIncrMemo.dir(spark, sfDir, "graft-pca-cov-incr") { d =>
       val deltas = pcaDeltas(spark, sfDir)
       pcaCovAgg(deltas.filter(col("vec_id") % 2 === 0))
         .write.mode("overwrite").parquet(d)
       pcaCovAgg(deltas.filter(col("vec_id") % 2 === 1))
         .write.mode("append").parquet(d)
-      d
-    })
+    }
     Tables.cachedScan(spark, dir)
       .groupBy("i", "j")
       .agg(sum(col("s")).cast("decimal(38,0)").cast("string").as("cov_sum"))
       .orderBy("i", "j")
   }
 
-  private val covRawMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val covRawMemo = new SessionMemo[String, String]
 
   /** Per-batch RAW moments on the micro-unit lattice, as (i, j, s) cells:
     * (-1, -1) → row count, (i, -1) → Σ x_i, (i ≤ j) → Σ x_i·x_j. ONE
@@ -2764,16 +2698,13 @@ object Similarity {
     * a 64-row broadcast recenter. Oracle shared verbatim with q_pca_cov.
     */
   def pcaCovRecentered(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, covRawMemo)
-    val dir = covRawMemo.computeIfAbsent((spark, sfDir), _ => {
-      val d = SessionMemos.tempDir(spark, "graft-pca-cov-raw")
+    val dir = covRawMemo.dir(spark, sfDir, "graft-pca-cov-raw") { d =>
       val qv = pcaQv(spark, sfDir)
       rawMomentCells(qv.filter(col("vec_id") % 2 === 0))
         .write.mode("overwrite").parquet(d)
       rawMomentCells(qv.filter(col("vec_id") % 2 === 1))
         .write.mode("append").parquet(d)
-      d
-    })
+    }
     val store = Tables.cachedScan(spark, dir)
     val nRow = store.filter(col("i") === -1).groupBy().agg(sum("s").as("n"))
     val sx = store.filter(col("i") >= 0 && col("j") === -1)
@@ -2799,15 +2730,13 @@ object Similarity {
   /** Session memo for the collected scatter matrix (2080 BigInts —
     * d²-bounded driver state; the aggregation is deterministic, so
     * memoization changes nothing but job count). */
-  private val covMatrixMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[BigInt]]]()
+  private val covMatrixMemo = new SessionMemo[String, Array[Array[BigInt]]]
 
   /** The exact 64×64 scatter matrix S = Σ (dv)(dv)ᵀ as driver BigInts —
     * 2080 collected cells mirrored across the diagonal; d²-bounded state,
     * corpus-size-independent. */
-  private[graft] def pcaCovMatrix(spark: SparkSession, sfDir: String): Array[Array[BigInt]] = {
-    SessionMemos.arm(spark, covMatrixMemo)
-    covMatrixMemo.computeIfAbsent((spark, sfDir), _ => {
+  private[graft] def pcaCovMatrix(spark: SparkSession, sfDir: String): Array[Array[BigInt]] =
+    covMatrixMemo.memo(spark, sfDir) {
       val m = Array.fill(PcaDim, PcaDim)(BigInt(0))
       pcaCovAgg(pcaDeltas(spark, sfDir)).collect().foreach { r =>
         val (i, j) = (r.getLong(0).toInt, r.getLong(1).toInt)
@@ -2815,8 +2744,7 @@ object Similarity {
         m(i)(j) = v; m(j)(i) = v
       }
       m
-    })
-  }
+    }
 
   /** Full cyclic Jacobi eigensolve with rotation accumulation (Jacobi
     * 1846; the dense-symmetric workhorse at d = 64) — deterministic:

@@ -26,36 +26,26 @@ import org.apache.spark.sql.functions._
   */
 object Sources {
 
-  private val csvMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val jsonlMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val csvMemo = new SessionMemo[String, String]
+  private val jsonlMemo = new SessionMemo[String, String]
 
   /** Session-scoped CSV copy of `customer` (header, 4 files). */
-  private[graft] def csvDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, csvMemo)
-    csvMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-csv-src")
+  private[graft] def csvDir(spark: SparkSession, sfDir: String): String =
+    csvMemo.dir(spark, sfDir, "graft-csv-src") { dir =>
       Tables.customer(spark, sfDir)
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
         .repartition(4)
         .write.mode("overwrite").option("header", "true").csv(dir)
-      dir
-    })
-  }
+    }
 
   /** Session-scoped JSON-lines copy of `documents` (4 files). */
-  private[graft] def jsonlDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, jsonlMemo)
-    jsonlMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-jsonl-src")
+  private[graft] def jsonlDir(spark: SparkSession, sfDir: String): String =
+    jsonlMemo.dir(spark, sfDir, "graft-jsonl-src") { dir =>
       Tables.documents(spark, sfDir)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .repartition(4)
         .write.mode("overwrite").json(dir)
-      dir
-    })
-  }
+    }
 
   /** Per-segment customer rollup read from the CSV copy: count, exact
     * decimal balance sum, name extrema — covers integer, double and
@@ -74,24 +64,19 @@ object Sources {
         max(col("c_name")).as("last_name"))
       .orderBy("c_mktsegment")
 
-  private val orcMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val orcMemo = new SessionMemo[String, String]
 
   /** Session-scoped ORC copy of `orders` (4 files). ORC is the columnar
     * alternative a warehouse migration actually reads — unlike the text
     * formats it keeps column pruning and predicate pushdown. */
-  private[graft] def orcDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, orcMemo)
-    orcMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-orc-src")
+  private[graft] def orcDir(spark: SparkSession, sfDir: String): String =
+    orcMemo.dir(spark, sfDir, "graft-orc-src") { dir =>
       Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderpriority")
         .repartition(4)
         .write.mode("overwrite").orc(dir)
-      dir
-    })
-  }
+    }
 
   /** Per-priority order rollup read from the ORC copy — long/double/string
     * columns through the ORC writer/reader pair, plus a pushed filter so
@@ -129,36 +114,26 @@ object Sources {
   // encoding would silently truncate to µs and the sub-second checksums
   // below would hash-mismatch by name.
 
-  private val csvEventsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val jsonlEventsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val csvEventsMemo = new SessionMemo[String, String]
+  private val jsonlEventsMemo = new SessionMemo[String, String]
 
   /** Session-scoped CSV copy of `events` with `ts` as int64 ns (4 files). */
-  private[graft] def csvEventsDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, csvEventsMemo)
-    csvEventsMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-csv-events")
+  private[graft] def csvEventsDir(spark: SparkSession, sfDir: String): String =
+    csvEventsMemo.dir(spark, sfDir, "graft-csv-events") { dir =>
       Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .repartition(4)
         .write.mode("overwrite").option("header", "true").csv(dir)
-      dir
-    })
-  }
+    }
 
   /** Session-scoped JSON-lines copy of `events` with `ts` as int64 ns. */
-  private[graft] def jsonlEventsDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, jsonlEventsMemo)
-    jsonlEventsMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-jsonl-events")
+  private[graft] def jsonlEventsDir(spark: SparkSession, sfDir: String): String =
+    jsonlEventsMemo.dir(spark, sfDir, "graft-jsonl-events") { dir =>
       Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .repartition(4)
         .write.mode("overwrite").json(dir)
-      dir
-    })
-  }
+    }
 
   /** Per-type event rollup over the parsed frame: min/max raw ns, a
     * SUB-SECOND checksum (`sum(ts % 1e9)` — any µs truncation anywhere in
@@ -189,20 +164,15 @@ object Sources {
       .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
       .json(jsonlEventsDir(spark, sfDir)))
 
-  private val orcEventsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val orcEventsMemo = new SessionMemo[String, String]
 
-  private[graft] def orcEventsDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, orcEventsMemo)
-    orcEventsMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-orc-events")
+  private[graft] def orcEventsDir(spark: SparkSession, sfDir: String): String =
+    orcEventsMemo.dir(spark, sfDir, "graft-orc-events") { dir =>
       Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .repartition(4)
         .write.mode("overwrite").orc(dir)
-      dir
-    })
-  }
+    }
 
   /** ns-timestamp survival through ORC — the columnar member of the
     * events round-trip family: the bigint-ns `ts` is a native int64 ORC
@@ -212,18 +182,15 @@ object Sources {
   def orcEventsNs(spark: SparkSession, sfDir: String): DataFrame =
     eventsNsRollup(spark.read.orc(orcEventsDir(spark, sfDir)))
 
-  private val evolveMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val evolveMemo = new SessionMemo[String, String]
 
   /** Session-scoped SCHEMA-EVOLVED parquet table: generation 1 (even order
     * keys) is written WITHOUT `o_orderpriority` — the column a later
     * pipeline release added — then generation 2 (odd keys) appends WITH
     * it. Two physically different file schemas in one directory, the
     * standard lakehouse ingest reality after any producer upgrade. */
-  private[graft] def evolveDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, evolveMemo)
-    evolveMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-evolve-src")
+  private[graft] def evolveDir(spark: SparkSession, sfDir: String): String =
+    evolveMemo.dir(spark, sfDir, "graft-evolve-src") { dir =>
       val o = Tables.orders(spark, sfDir)
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -231,9 +198,7 @@ object Sources {
       o.filter(col("o_orderkey") % 2 =!= 0)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .write.mode("append").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** SCHEMA EVOLUTION read (`mergeSchema`): the union schema is
     * reconstructed across both file generations — pre-upgrade rows
@@ -256,8 +221,7 @@ object Sources {
         max(col("o_orderkey")).as("max_key"))
       .orderBy("priority")
 
-  private val overwriteMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val overwriteMemo = new SessionMemo[String, String]
 
   /** Session-scoped year-partitioned orders store exercising DYNAMIC
     * partition overwrite — the restatement primitive of every partitioned
@@ -269,10 +233,8 @@ object Sources {
     * would have deleted every other year first; serving all years green
     * against the full-table oracle therefore proves both the restatement
     * AND that untouched partitions survived. */
-  private[graft] def overwriteDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, overwriteMemo)
-    overwriteMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-dynpart-src")
+  private[graft] def overwriteDir(spark: SparkSession, sfDir: String): String =
+    overwriteMemo.dir(spark, sfDir, "graft-dynpart-src") { dir =>
       // fenced: the min-year collect and the two writes are three jobs —
       // unfenced each would rescan orders (review r11); unpersisted after
       val o = Dedup.fence(Tables.orders(spark, sfDir)
@@ -292,9 +254,7 @@ object Sources {
           case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
       } finally o.unpersist()
-      dir
-    })
-  }
+    }
 
   /** Per-year rollup served from the dynamically-restated store — must
     * equal the oracle's rollup over the pristine `orders`, which fails if

@@ -161,8 +161,7 @@ object SuffixDedup {
   /** Session memo for the full rank-table ladder (rank_0 .. rank_R, each
     * localCheckpointed) — deterministic construction, so memoizing only
     * stops bench reps from re-running the doubling rounds. */
-  private val ranksMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[DataFrame]]()
+  private val ranksMemo = new SessionMemo[String, IndexedSeq[DataFrame]]
 
   /** Un-memoized ladder construction over an arbitrary documents frame —
     * the kmeansAssignedFrom precedent, so specs can plant corpora with
@@ -176,9 +175,7 @@ object SuffixDedup {
   }
 
   private[graft] def suffixRanks(spark: SparkSession, sfDir: String): IndexedSeq[DataFrame] = {
-    SessionMemos.arm(spark, ranksMemo)
-    val ladder = ranksMemo.computeIfAbsent((spark, sfDir),
-      _ => buildRanks(Tables.documents(spark, sfDir)))
+    val ladder = ranksMemo.memo(spark, sfDir)(buildRanks(Tables.documents(spark, sfDir)))
     lastRounds.set(ladder.length - 1)
     ladder
   }
@@ -194,15 +191,12 @@ object SuffixDedup {
     * half (suffix order + the 2·R-join walk), shared by the span top-k
     * and the masking readout; checkpointed so consumers replan from a
     * materialized leaf. */
-  private val lcpsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lcpsMemo = new SessionMemo[String, DataFrame]
 
-  private def adjacentLcpsMemo(spark: SparkSession, sfDir: String): DataFrame = {
-    SessionMemos.arm(spark, lcpsMemo)
-    lcpsMemo.computeIfAbsent((spark, sfDir), _ =>
+  private def adjacentLcpsMemo(spark: SparkSession, sfDir: String): DataFrame =
+    lcpsMemo.memo(spark, sfDir)(
       adjacentLcps(Tables.documents(spark, sfDir), suffixRanks(spark, sfDir))
         .localCheckpoint())
-  }
 
   /** The registered query: top [[SuffixTopK]] duplicated spans by
     * (lcp DESC, doc_a, pos_a, doc_b, pos_b) with the span's md5
@@ -211,8 +205,7 @@ object SuffixDedup {
   def suffixDedup(spark: SparkSession, sfDir: String): DataFrame =
     spanTopK(Tables.documents(spark, sfDir), adjacentLcpsMemo(spark, sfDir))
 
-  private val lcpIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val lcpIndexMemo = new SessionMemo[String, String]
 
   /** Persist the adjacency-LCP artifact — the EXPENSIVE half of the
     * suffix family (⌈log₂ L⌉ doubling rounds + the 2·R-join walk) — as an
@@ -220,14 +213,10 @@ object SuffixDedup {
     * suffix array itself; we keep its adjacency-LCP readout, the frame
     * every downstream consumer folds). One write per corpus; serving
     * reads per-row facts (da, pa, db, pb, lcp). */
-  private[graft] def lcpIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, lcpIndexMemo)
-    lcpIndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-suffix-lcp-index")
+  private[graft] def lcpIndexDir(spark: SparkSession, sfDir: String): String =
+    lcpIndexMemo.dir(spark, sfDir, "graft-suffix-lcp-index") { dir =>
       adjacentLcpsMemo(spark, sfDir).write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** `q_suffix_spans_served` (r16): the top-span readout off the STORED
     * adjacency-LCP artifact — zero ladder or walk recompute anywhere in
@@ -341,21 +330,16 @@ object SuffixDedup {
     windowsOf(docs).withColumn("batch", lit(batch))
       .write.mode("append").parquet(dir)
 
-  private val winIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val winIndexMemo = new SessionMemo[String, String]
 
   /** Two-parity-batch window index over the corpus — the appendable
     * lifecycle fixture every other incremental family uses. */
-  private def winIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, winIndexMemo)
-    winIndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-suffix-win-index")
+  private def winIndexDir(spark: SparkSession, sfDir: String): String =
+    winIndexMemo.dir(spark, sfDir, "graft-suffix-win-index") { dir =>
       val docs = Tables.documents(spark, sfDir)
       appendWindowFrame(docs.filter(col("doc_id") % 2 === 0), dir, 0L)
       appendWindowFrame(docs.filter(col("doc_id") % 2 === 1), dir, 1L)
-      dir
-    })
-  }
+    }
 
   /** `q_suffix_mask_incremental`: serve the ExactSubstr mask off the
     * STORED window-posting index (two appended batches) — one

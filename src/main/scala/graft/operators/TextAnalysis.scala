@@ -317,8 +317,7 @@ object TextAnalysis {
     * scoring pass no longer shares the (doc, word) stream with training,
     * so the dw fence (one corpus-sized repartition+persist per rep) is
     * gone too. */
-  private val nbModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (DataFrame, DataFrame)]()
+  private val nbModelMemo = new SessionMemo[(String, String), (DataFrame, DataFrame)]
 
   def naiveBayes(spark: SparkSession, sfDir: String): DataFrame = {
     // per-(doc, word) counts: the scoring stream (and, on first build,
@@ -326,8 +325,7 @@ object TextAnalysis {
     val dw = WordCount.tokens(Tables.documents(spark, sfDir))
       .groupBy("doc_id", "lang", "word")
       .agg(count(lit(1)).as("cnt"))
-    SessionMemos.arm(spark, nbModelMemo)
-    val (grid, priors) = nbModelMemo.computeIfAbsent((spark, sfDir, "self"), _ => {
+    val (grid, priors) = nbModelMemo.memo(spark, (sfDir, "self")) {
       val cw = dw.groupBy(col("lang").as("c"), col("word")).agg(sum("cnt").as("cwc"))
       val ct = cw.groupBy("c").agg(sum("cwc").as("tokc"))
       val nDocs = Tables.documents(spark, sfDir).agg(count(lit(1)).as("nd"))
@@ -337,7 +335,7 @@ object TextAnalysis {
         .select(col("c"),
           round(log(col("nc") / col("nd")), 8).cast("decimal(18,8)").as("prior"))
       (nbGrid(cw, ct, "naiveBayes").localCheckpoint(), p.localCheckpoint())
-    })
+    }
     val scores = dw.join(broadcast(grid), "word")
       .groupBy("doc_id", "lang", "c")
       .agg(sum(col("cnt") * col("lik")).as("s"))
@@ -386,8 +384,7 @@ object TextAnalysis {
       .filter(col("split") =!= "test")
       .groupBy("doc_id", "lang", "split", "word")
       .agg(count(lit(1)).as("cnt"))
-    SessionMemos.arm(spark, nbModelMemo)
-    val (grid, priors) = nbModelMemo.computeIfAbsent((spark, sfDir, "holdout"), _ => {
+    val (grid, priors) = nbModelMemo.memo(spark, (sfDir, "holdout")) {
       val cw = dw.filter(col("split") === "train")
         .groupBy(col("lang").as("c"), col("word")).agg(sum("cnt").as("cwc"))
       val ct = cw.groupBy("c").agg(sum("cwc").as("tokc"))
@@ -401,7 +398,7 @@ object TextAnalysis {
         .select(col("c"),
           round(log(col("nc") / col("nd")), 8).cast("decimal(18,8)").as("prior"))
       (nbGrid(cw, ct, "nbHoldout").localCheckpoint(), p.localCheckpoint())
-    })
+    }
     val scores = dw.join(broadcast(grid), "word")
       .groupBy("doc_id", "lang", "split", "c")
       .agg(sum(col("cnt") * col("lik")).as("s"))
@@ -792,17 +789,13 @@ object TextAnalysis {
     * tags imply equal vocab frames. Weights are a deterministic function
     * of (corpus, vocab), so memoizing changes no score. LAZY
     * localCheckpoint: plan construction stays job-free; blocks are written
-    * on first action and survive `catalog.clearCache()`. No-rewrite
-    * assumption: [[SessionMemos]].
+    * on first action and survive `catalog.clearCache()`.
     */
-  private val weightsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val weightsMemo = new SessionMemo[(String, String), DataFrame]
 
   private[graft] def termWeightsMemo(spark: SparkSession, sfDir: String, tag: String)
                                     (vocab: => DataFrame): DataFrame = {
-    SessionMemos.arm(spark, weightsMemo)
-    weightsMemo.computeIfAbsent((spark, sfDir, tag),
-      _ => termWeights(spark, sfDir, vocab).localCheckpoint(false))
+    weightsMemo.memo(spark, (sfDir, tag))(termWeights(spark, sfDir, vocab).localCheckpoint(false))
   }
 
   private[graft] def termWeights(spark: SparkSession, sfDir: String, vocab: DataFrame): DataFrame = {
@@ -943,23 +936,17 @@ object TextAnalysis {
     * terms' directories at plan time (asserted by `selectedPartitions`
     * in StorageLayoutSpec). Written under the JVM temp dir — a
     * production deployment points this at its warehouse; the path memo,
-    * not the path, is the pattern. No-rewrite assumption:
-    * [[SessionMemos]].
+    * not the path, is the pattern.
     */
-  private val bm25IndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val bm25IndexMemo = new SessionMemo[String, String]
 
-  private[graft] def bm25IndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, bm25IndexMemo)
-    bm25IndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-bm25-index")
+  private[graft] def bm25IndexDir(spark: SparkSession, sfDir: String): String =
+    bm25IndexMemo.dir(spark, sfDir, "graft-bm25-index") { dir =>
       val fullVocab = Tables.documents(spark, sfDir)
         .select(explode(split(col("text"), " ")).as("word")).distinct()
       termWeights(spark, sfDir, fullVocab)
         .write.partitionBy("word").mode("overwrite").parquet(dir)
-      dir
-    })
-  }
+    }
 
   /** BM25 ranked retrieval SERVED from the stored term-partitioned index
     * — the registered production lifecycle (VERDICT r9 ask #3): the
@@ -1007,22 +994,16 @@ object TextAnalysis {
     * stats. Appending batch B touches only B's postings and one stats
     * row; nothing already written is read or rewritten. df for a term
     * is the row count of its partition — available post-pruning.
-    * No-rewrite assumption: [[SessionMemos]].
     */
-  private val postingsIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val postingsIndexMemo = new SessionMemo[String, String]
 
-  private[graft] def postingsIndexDir(spark: SparkSession, sfDir: String): String = {
-    SessionMemos.arm(spark, postingsIndexMemo)
-    postingsIndexMemo.computeIfAbsent((spark, sfDir), _ => {
-      val dir = SessionMemos.tempDir(spark, "graft-bm25-postings")
+  private[graft] def postingsIndexDir(spark: SparkSession, sfDir: String): String =
+    postingsIndexMemo.dir(spark, sfDir, "graft-bm25-postings") { dir =>
       // two deterministic "crawl batches" (even / odd doc ids): the first
       // write creates the index, the second is a pure append
       appendPostingsBatch(spark, sfDir, dir, 0)
       appendPostingsBatch(spark, sfDir, dir, 1)
-      dir
-    })
-  }
+    }
 
   /** Append one crawl batch's postings + stats row to the standing index
     * at `dir`. Package-private so StorageLayoutSpec can drive the

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 
 import scala.collection.mutable
 
+import graft.operators.SessionMemo
+
 /** Materialized-view registry + aggregate-rewrite rule (SURVEY §2 B10 /
   * §4's documented optimizer-extension family, round 11) — the classic
   * summary-table optimization every warehouse ships (Oracle query rewrite,
@@ -58,19 +60,15 @@ object MvRegistry {
       measures: Seq[(Expression, String)],
       cntCol: String)
 
-  private val defs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), MvDef]()
+  private val defs = new SessionMemo[String, MvDef]
 
-  private[graft] def register(spark: SparkSession, d: MvDef): Unit = {
-    graft.operators.SessionMemos.arm(spark, defs)
-    defs.put((spark, d.factPaths.toSeq.sorted.mkString(",")), d)
-  }
+  private def key(paths: Set[String]): String = paths.toSeq.sorted.mkString(",")
+
+  private[graft] def register(spark: SparkSession, d: MvDef): Unit =
+    defs.memo(spark, key(d.factPaths))(d)
 
   private[graft] def lookup(spark: SparkSession, paths: Set[String]): Option[MvDef] =
-    Option(defs.get((spark, paths.toSeq.sorted.mkString(","))))
-
-  private[graft] def clear(spark: SparkSession): Unit =
-    defs.keySet.removeIf(_._1 eq spark)
+    defs.get(spark, key(paths))
 }
 
 object MvRewriteRule extends Rule[LogicalPlan] {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.SessionMemo
+
 /** Genuinely-streaming operators (SURVEY.md §2.B8): the same window
   * aggregations as the oracle-checked batch twins in
   * graft.operators.StreamingTwins, expressed over an *unbounded* input plus
@@ -43,8 +45,7 @@ object StreamingOps {
       .select(unix_timestamp(col("w.start")).as("bucket_sec"), col("event_type"),
         col("n_events"))
 
-  private val wmReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, String, Long)]]()
+  private val wmReplayMemo = new SessionMemo[String, Array[(Long, String, Long)]]
 
   /** ORACLE-CHECKABLE WATERMARK RUN (VERDICT r11 ask #3): a REAL
     * Structured Streaming execution of [[tumblingWithWatermark]] whose
@@ -81,8 +82,7 @@ object StreamingOps {
     */
   def watermarkedWindowsReplay(spark: org.apache.spark.sql.SparkSession,
                                sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, wmReplayMemo)
-    val rows = wmReplayMemo.computeIfAbsent((spark, sfDir), _ => runWatermarkReplay(spark, sfDir))
+    val rows = wmReplayMemo.memo(spark, sfDir)(runWatermarkReplay(spark, sfDir))
     import spark.implicits._
     rows.toSeq.toDF("bucket_sec", "event_type", "n_events")
       .orderBy("bucket_sec", "event_type")
@@ -141,8 +141,7 @@ object StreamingOps {
     out.as[(Long, String, Long)].collect().sortBy(r => (r._1, r._2))
   }
 
-  private val dedupReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, Long, String)]]()
+  private val dedupReplayMemo = new SessionMemo[String, Array[(Long, Long, String)]]
 
   /** ORACLE-CHECKED STREAMING DEDUP (r12, converting another B8 test-only
     * row): a real `dropDuplicatesWithinWatermark` run over a fixture that
@@ -159,8 +158,7 @@ object StreamingOps {
     */
   def streamDedupReplay(spark: org.apache.spark.sql.SparkSession,
                         sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, dedupReplayMemo)
-    val rows = dedupReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = dedupReplayMemo.memo(spark, sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts_us"), col("event_id"), col("user_id"), col("event_type"))
       val maxTs = ev.agg(max(col("ts_us"))).head().getTimestamp(0)
@@ -170,13 +168,12 @@ object StreamingOps {
       import spark.implicits._
       out.select(col("event_id"), col("user_id"), col("event_type"))
         .as[(Long, Long, String)].collect().sortBy(_._1)
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("event_id", "user_id", "event_type").orderBy("event_id")
   }
 
-  private val enrichReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, Long, String, String)]]()
+  private val enrichReplayMemo = new SessionMemo[String, Array[(Long, Long, String, String)]]
 
   /** ORACLE-CHECKED STREAM-STATIC JOIN (r12): the event stream enriched
     * with the static customer dimension, run as a REAL streaming query
@@ -186,8 +183,7 @@ object StreamingOps {
     * honest about the per-micro-batch re-plan. */
   def streamEnrichReplay(spark: org.apache.spark.sql.SparkSession,
                          sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, enrichReplayMemo)
-    val rows = enrichReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = enrichReplayMemo.memo(spark, sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts_us"), col("event_id"), col("user_id"), col("event_type"))
       val cust = graft.Tables.customer(spark, sfDir)
@@ -197,14 +193,13 @@ object StreamingOps {
         OutputMode.Append())(s => enrichWithCustomer(s, cust))
       import spark.implicits._
       out.as[(Long, Long, String, String)].collect().sortBy(_._1)
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("event_id", "user_id", "event_type", "c_mktsegment")
       .orderBy("event_id")
   }
 
-  private val funnelReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(String, Long, Long)]]()
+  private val funnelReplayMemo = new SessionMemo[String, Array[(String, Long, Long)]]
 
   /** ORACLE-CHECKED ARBITRARY STATEFUL (r12): the mapGroupsWithState
     * funnel ([[funnelStates]]) run as a real stream over THREE
@@ -219,8 +214,7 @@ object StreamingOps {
     */
   def streamFunnelReplay(spark: org.apache.spark.sql.SparkSession,
                          sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, funnelReplayMemo)
-    val rows = funnelReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = funnelReplayMemo.memo(spark, sfDir) {
       import spark.implicits._
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"), col("event_type"),
@@ -241,13 +235,12 @@ object StreamingOps {
           " AS (stage, stage_ord, n_users)")
         .as[(String, Int, Long)].collect().map(r => (r._1, r._2.toLong, r._3))
         .sortBy(_._2)
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("stage", "stage_ord", "n_users").orderBy("stage_ord")
   }
 
-  private val ssJoinReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, Long, Long)]]()
+  private val ssJoinReplayMemo = new SessionMemo[String, Array[(Long, Long, Long)]]
 
   /** ORACLE-CHECKED STREAM-STREAM JOIN (r13, VERDICT r12 ask #2 — the
     * last oracle-convertible B8 species): [[clickToPurchase]] run as a
@@ -278,8 +271,7 @@ object StreamingOps {
     */
   def streamStreamJoinReplay(spark: org.apache.spark.sql.SparkSession,
                              sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, ssJoinReplayMemo)
-    val rows = ssJoinReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = ssJoinReplayMemo.memo(spark, sfDir) {
       import spark.implicits._
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts_us"), col("event_id"), col("user_id"), col("event_type"),
@@ -290,7 +282,7 @@ object StreamingOps {
         OutputMode.Append())(s => clickToPurchase(s, s))
       out.select(col("click_id"), col("purchase_id"), col("user_id"))
         .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("click_id", "purchase_id", "user_id")
       .orderBy("click_id", "purchase_id")
@@ -311,8 +303,7 @@ object StreamingOps {
         expr("unix_micros(w.end)").as("end_us"),
         col("n_events"), col("min_eid"), col("max_eid"))
 
-  private val sessReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, Long, Long, Long, Long, Long)]]()
+  private val sessReplayMemo = new SessionMemo[String, Array[(Long, Long, Long, Long, Long, Long)]]
 
   /** ORACLE-CHECKED STREAMED SESSION WINDOWS (r13): a REAL streamed run
     * of [[sessionsWithWatermark]] over the q_watermark_windows fixture
@@ -333,8 +324,7 @@ object StreamingOps {
     * hash by name. */
   def streamSessionsReplay(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, sessReplayMemo)
-    val rows = sessReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = sessReplayMemo.memo(spark, sfDir) {
       import spark.implicits._
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts_us"), col("event_id"), col("user_id"))
@@ -346,7 +336,7 @@ object StreamingOps {
         OutputMode.Append())(sessionsWithWatermark)
       out.as[(Long, Long, Long, Long, Long, Long)].collect()
         .sortBy(r => (r._1, r._2))
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("user_id", "start_us", "end_us", "n_events", "min_eid", "max_eid")
       .orderBy("user_id", "start_us")
@@ -477,8 +467,7 @@ object StreamingOps {
         col("click_ts"))
   }
 
-  private val ssOuterReplayMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[(Long, Option[Long], Long)]]()
+  private val ssOuterReplayMemo = new SessionMemo[String, Array[(Long, Option[Long], Long)]]
 
   /** ORACLE-CHECKED LEFT-OUTER STREAM-STREAM JOIN (r13) — the
     * null-emission semantics the inner replay cannot observe: the same
@@ -506,8 +495,7 @@ object StreamingOps {
     */
   def streamStreamOuterReplay(spark: org.apache.spark.sql.SparkSession,
                               sfDir: String): DataFrame = {
-    graft.operators.SessionMemos.arm(spark, ssOuterReplayMemo)
-    val rows = ssOuterReplayMemo.computeIfAbsent((spark, sfDir), _ => {
+    val rows = ssOuterReplayMemo.memo(spark, sfDir) {
       import spark.implicits._
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts_us"), col("event_id"), col("user_id"), col("event_type"),
@@ -519,7 +507,7 @@ object StreamingOps {
       out.select(col("click_id"), col("purchase_id"), col("user_id"))
         .as[(Long, Option[Long], Long)].collect()
         .sortBy(r => (r._1, r._2.getOrElse(Long.MinValue)))
-    })
+    }
     import spark.implicits._
     rows.toSeq.toDF("click_id", "purchase_id", "user_id")
       .orderBy("click_id", "purchase_id")
