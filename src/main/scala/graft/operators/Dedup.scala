@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextHashFunctions.{jaccardSorted, minHashBands, shingleHashes, simHash60}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication surface (SURVEY.md §2.B9): exact, hash, and three
   * near-duplicate detectors with *identical output semantics* but different
@@ -120,6 +122,28 @@ object Dedup {
     if (r.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else r
+  }
+
+  /** `df`'s rows on the driver when the frame is DRIVER-SIZED, else None —
+    * the one gate between the driver-local and the distributed forms of
+    * the iterative graph loops ([[TextAnalysis.textrank]],
+    * [[connectedComponents]]). Driver-sized means row count × Spark's
+    * per-row size estimate (`EstimationUtils.getSizePerRow` of the output)
+    * ≤ `spark.sql.autoBroadcastJoinThreshold`: the size Spark itself
+    * already collects and ships to every executor as a broadcast join
+    * side. A threshold of -1 (broadcasts off) returns None without a job.
+    * Costs one count over `df` plus the collect, so `df` should be
+    * checkpointed (both callers pass their loop input, checkpointed
+    * lazily so that the count is the job that materializes it).
+    */
+  private[operators] def collectIfDriverSized(df: DataFrame): Option[Array[Row]] = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit < 0) None
+    else {
+      val rowSize = EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+      // toRdd.count is one map-only job; Dataset.count adds a shuffle stage
+      if (rowSize * df.queryExecution.toRdd.count() <= limit) Some(df.collect()) else None
+    }
   }
 
   /** Verify candidate (doc_a, doc_b) pairs against the exact Jaccard
@@ -599,7 +623,9 @@ object Dedup {
     * groupBy min, all keyed on 8-byte doc ids — never text. The pair feed
     * is the UNSORTED minhash pipeline (the presentation sort would be an
     * immediately-discarded range exchange). At 100 TB scale the same loop
-    * holds (label frame = one (long, long) row per clustered doc).
+    * holds (label frame = one (long, long) row per clustered doc); a pair
+    * list under the [[collectIfDriverSized]] gate skips the rounds and is
+    * labeled on the driver by a union-find with the same fixpoint.
     */
   def neardupClusters(spark: SparkSession, sfDir: String): DataFrame =
     neardupClustersRaw(spark, sfDir).orderBy("doc_id")
@@ -613,10 +639,12 @@ object Dedup {
     * `q_pipeline_keep_neardup`) from re-running the banded candidate
     * pipeline and the iterative label loop in one session — exactly how a
     * production pipeline treats its dedup index (computed once, then read
-    * by every downstream stage). The stored frame is checkpoint-truncated
-    * by [[connectedComponents]] — one (long, long, bool) row per clustered
-    * doc in lineage-free blocks that survive `catalog.clearCache()` — so
-    * the memo holds a block reference, not driver data. Spec-planted pair
+    * by every downstream stage). The stored frame holds one (long, long,
+    * bool) row per clustered doc, lineage-free either way: below the
+    * [[collectIfDriverSized]] gate it is a local frame whose rows the memo
+    * keeps on the driver; above it, checkpoint-truncated blocks that
+    * survive `catalog.clearCache()`, so the memo holds a block reference,
+    * not driver data. Spec-planted pair
     * frames go through [[connectedComponents]] directly, which does NOT
     * memoize.
     */
@@ -654,6 +682,13 @@ object Dedup {
     *    is re-read every round, and without the checkpoint the symmetric
     *    union would compute the (possibly expensive) upstream candidate
     *    pipeline twice, then every round would re-plan the whole lineage;
+    *  - a DRIVER-SIZED pair list of bigint ids ([[collectIfDriverSized]]
+    *    states the gate) is collected and labeled by [[componentMinima]],
+    *    a union-find whose roots are component minima — the very fixpoint
+    *    the rounds below converge to — and returned as a local frame:
+    *    O(1) jobs instead of several per round. The rounds run only above
+    *    the gate (or with broadcasts off, or other id types), so a pair
+    *    list no driver can hold still iterates on the cluster;
     *  - convergence is decided by a single scalar aggregate per round:
     *    labels are monotonically non-increasing, so the label SUM is
     *    strictly smaller iff any label changed — no per-round compare
@@ -670,18 +705,59 @@ object Dedup {
     *    reclaimed by the ContextCleaner once unreferenced.
     */
   def connectedComponents(pairs: DataFrame): DataFrame = {
-    // Materialize the pair list once, truncating upstream lineage (without
-    // truncation the iterative loop's plan grows per round and analysis
-    // cost compounds). RELIABLE checkpoint when the session has a
-    // checkpoint dir — lineage-free blocks survive executor loss, which is
-    // what a multi-node 100 TB run requires; localCheckpoint otherwise
-    // (single-process sessions like this harness: executor loss == driver
-    // loss, so the reliability gap is moot there and the dir may not exist).
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
-    val p = truncate(pairs)
+    // lazy: the first action over it (the gate's count, or the first
+    // round) materializes the blocks, saving the eager checkpoint's own job
+    val p = truncate(pairs, eager = false)
+    val local =
+      if (p.schema.forall(_.dataType == LongType)) collectIfDriverSized(p) else None
+    local match {
+      case Some(rows) =>
+        val spark = p.sparkSession
+        import spark.implicits._
+        componentMinima(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+          .map { case (v, c) => (v, c, v == c) }
+          .toDF("doc_id", "cluster", "is_survivor")
+      case None => distributedComponents(p)
+    }
+  }
+
+  /** Materialize a loop frame, truncating its lineage (without truncation
+    * the iterative loop's plan grows per round and analysis cost
+    * compounds). RELIABLE checkpoint when the session has a checkpoint
+    * dir — lineage-free blocks survive executor loss, which is what a
+    * multi-node 100 TB run requires; localCheckpoint otherwise
+    * (single-process sessions like this harness: executor loss == driver
+    * loss, so the reliability gap is moot there and the dir may not
+    * exist). */
+  private def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
+
+  /** Union-find over `pairs` with path compression, every union pointing
+    * the larger root at the smaller — so each root is its component's
+    * minimum and the result maps every node to its hash-min label. */
+  private def componentMinima(pairs: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    for ((a, b) <- pairs) {
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toSeq.map(v => v -> find(v))
+  }
+
+  /** The above-gate form of [[connectedComponents]]: hash-min +
+    * pointer-halving rounds over the checkpointed pair list `p`, each
+    * round's labels truncated (see its iteration-mechanics notes). */
+  private def distributedComponents(p: DataFrame): DataFrame = {
     // symmetric edge list: propagate labels in both directions (lazy — two
     // map-side reads of the checkpointed blocks, nothing recomputes)
     val edges = p.union(p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
@@ -936,7 +1012,7 @@ object Dedup {
     * lists (r17): the exact [[clusterMemo]] contract applied to the
     * embedding family, whose two registered cluster queries re-ran the
     * pair generation + iterative component loop every rep. Both maps are
-    * deterministic and checkpoint-truncated by [[connectedComponents]];
+    * deterministic and lineage-free out of [[connectedComponents]];
     * the k-parameterized ScaleCurve sibling below stays unmemoized. */
   private val embClusterMemo = new SessionMemo[String, DataFrame]
   private val embTightClusterMemo = new SessionMemo[String, DataFrame]

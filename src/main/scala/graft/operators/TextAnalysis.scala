@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: everything is tokenize → hash-agg → (optional) join on a
   * small broadcast side (corpus-level stats like N and DF are
-  * vocabulary-sized, not corpus-sized). No driver materialization, no
-  * all-pairs anywhere.
+  * vocabulary-sized, not corpus-sized). No all-pairs anywhere, and no
+  * driver materialization except a TextRank graph under the driver-sized
+  * gate (see [[textrank]]).
   *
   * Reference provenance: /root/reference is an empty checkout (SURVEY.md §0);
   * TF-IDF follows Salton & Buckley (1988) with the smoothed idf
@@ -595,49 +596,91 @@ object TextAnalysis {
     *
     * Scale shape: the GRAPH is vocabulary-sized — nodes = distinct words,
     * edges = distinct bigrams — built from one corpus pass (the bigram
-    * count aggregate), after which every iteration touches only the graph:
-    * rank ⋈ edges on the 8-byte-hashable word key, contributions
-    * partial-aggregated map-side, plus the damping add — no corpus data in
-    * the loop. Per-round `localCheckpoint` keeps lineage O(1) (same
-    * discipline as connectedComponents/bpeMerges). Driver traffic is zero
-    * rows per round (fixed iteration count, no convergence probe).
-    *
-    * r17: each round BROADCASTS the vocab-bounded rank frame into the
-    * join, so the checkpointed graph is never re-exchanged or re-sorted
-    * per round (2 exchanges/round removed; measured 2.50 s → 1.91 s
-    * like-for-like). The fully-lazy 10-round single-plan variant was
-    * measured too (1.83 s cold but 1.72 s vs 1.23 s in a WARM bench JVM
-    * — AQE re-plans the 42-Exchange chain at every stage boundary, which
-    * a warm scheduler does not amortize) and rejected; the per-round
-    * checkpoint + broadcast form is strictly less work per round than
-    * r16 in both contexts.
+    * count aggregate) and checkpointed once; no corpus data enters the
+    * loop. Where the rounds run depends on the graph's size
+    * ([[Dedup.collectIfDriverSized]] states the gate):
+    *  - a DRIVER-SIZED graph is collected once and iterated in
+    *    [[textrankLocal]] with the round's exact arithmetic — O(1) jobs
+    *    in place of ~3 per round (the `bpeMerges` topology); the
+    *    presentation tail runs over a local frame of the ranks;
+    *  - above the gate (or with broadcasts off) each round is
+    *    [[textrankRound]] on the cluster: rank ⋈ edges on the 8-byte-
+    *    hashable word key, contributions partial-aggregated map-side, plus
+    *    the damping add. Per-round `localCheckpoint` keeps lineage O(1)
+    *    (same discipline as connectedComponents), and driver traffic is
+    *    zero rows per round (fixed iteration count, no convergence probe).
+    *    r17: each round BROADCASTS the vocab-bounded rank frame into the
+    *    join, so the checkpointed graph is never re-exchanged or re-sorted
+    *    per round (2 exchanges/round removed; measured 2.50 s → 1.91 s
+    *    like-for-like). The fully-lazy 10-round single-plan variant was
+    *    measured too (1.83 s cold but 1.72 s vs 1.23 s in a WARM bench JVM
+    *    — AQE re-plans the 42-Exchange chain at every stage boundary,
+    *    which a warm scheduler does not amortize) and rejected.
     *
     * Float discipline: each contribution r(u)·w/wdeg(u) is one IEEE
     * multiply-divide rounded into DECIMAL(20,10) BEFORE the neighbor sum,
     * so every round's sums are exact and ordering-independent —
-    * deterministic across partitionings and retries; the spec's in-memory
-    * recompute reproduces them bit-for-bit — and the same construction
-    * makes the query ORACLE-CHECKED: the fixed iteration count unrolls
-    * into one plain-SQL CTE per round (SparkEntry.textrankOracleSql,
-    * generated from these constants), which DuckDB replays exactly.
+    * deterministic across partitionings and retries, and the driver and
+    * cluster forms agree bit-for-bit (TextAnalysisSpec pins the full rank
+    * frame) — and the same construction makes the query ORACLE-CHECKED:
+    * the fixed iteration count unrolls into one plain-SQL CTE per round
+    * (SparkEntry.textrankOracleSql, generated from these constants), which
+    * DuckDB replays exactly.
     */
-  def textrank(spark: SparkSession, sfDir: String): DataFrame = {
-    val graph = textrankGraph(spark, sfDir).localCheckpoint()
-    var ranks = graph.select(col("src").as("word")).distinct()
-      .withColumn("rank", lit(1.0))
-      .localCheckpoint()
-    for (_ <- 1 to TextRankIters) {
-      val prev = ranks
-      ranks = textrankRound(graph, ranks).localCheckpoint()
-      prev.unpersist()
-    }
-    // the final ranks frame stays checkpointed until the result is
-    // unreferenced (ContextCleaner reclaims the blocks) — unpersisting here
-    // would orphan the lineage-truncated result before it is consumed
-    ranks
+  def textrank(spark: SparkSession, sfDir: String): DataFrame =
+    textrankRanks(spark, sfDir)
       .select(col("word"), round(col("rank"), 6).as("score"))
       .orderBy(desc("score"), asc("word"))
       .limit(20)
+
+  /** Every word's unrounded (word, rank) after [[TextRankIters]] rounds —
+    * [[textrank]] before its presentation tail. */
+  private[graft] def textrankRanks(spark: SparkSession, sfDir: String): DataFrame = {
+    // lazy: the gate's count (or the first round) materializes the graph
+    val graph = textrankGraph(spark, sfDir).localCheckpoint(eager = false)
+    Dedup.collectIfDriverSized(graph) match {
+      case Some(rows) =>
+        import spark.implicits._
+        textrankLocal(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))))
+          .toSeq.toDF("word", "rank")
+      case None =>
+        var ranks = graph.select(col("src").as("word")).distinct()
+          .withColumn("rank", lit(1.0))
+          .localCheckpoint()
+        for (_ <- 1 to TextRankIters) {
+          val prev = ranks
+          ranks = textrankRound(graph, ranks).localCheckpoint()
+          prev.unpersist()
+        }
+        // the final ranks frame stays checkpointed until the result is
+        // unreferenced (ContextCleaner reclaims the blocks) — unpersisting
+        // here would orphan the lineage-truncated result before it is
+        // consumed
+        ranks
+    }
+  }
+
+  /** [[TextRankIters]] rounds of [[textrankRound]] over collected
+    * (src, dst, w, wdeg) edges, in the round's own arithmetic: the
+    * contribution `round(rank·w/wdeg, 10)` (double multiply-divide, then
+    * HALF_UP to scale 10 — Spark's `round` on a double) summed exactly as
+    * a decimal per node, then `(1 - d) + d·sum` in double. A node keeps a
+    * rank only while some ranked node points at it, as in the round's
+    * inner join. */
+  private def textrankLocal(edges: Array[(String, String, Long, Long)]): Map[String, Double] = {
+    var ranks = edges.iterator.map(_._1 -> 1.0).toMap
+    for (_ <- 1 to TextRankIters) {
+      val inbox = scala.collection.mutable.HashMap.empty[String, java.math.BigDecimal]
+      for ((src, dst, w, wdeg) <- edges; r <- ranks.get(src)) {
+        val c = java.math.BigDecimal.valueOf(r * w / wdeg)
+          .setScale(10, java.math.RoundingMode.HALF_UP)
+        inbox(dst) = inbox.get(dst).fold(c)(_.add(c))
+      }
+      ranks = inbox.iterator.map { case (v, sum) =>
+        v -> ((1.0 - TextRankD) + TextRankD * sum.doubleValue)
+      }.toMap
+    }
+    ranks
   }
 
   /** The symmetric weighted co-occurrence graph (src, dst, w, wdeg) —
@@ -668,7 +711,8 @@ object TextAnalysis {
 
   /** One rank-update round: graph ⋈ ranks on the word key, each
     * contribution rounded into DECIMAL(20,10) before the neighbor sum,
-    * damping applied. Shared by the iterating loop and PlanHygieneSpec
+    * damping applied. The above-gate loop body of [[textrankRanks]]
+    * ([[textrankLocal]] is its driver twin), shared with PlanHygieneSpec
     * (the registered query's FINAL plan does not contain the per-round
     * plans, so the spec asserts hygiene on this frame directly).
     */

@@ -277,26 +277,17 @@ class CurationSpec extends SparkSpec {
     import graft.operators.Curation
     // the scale contract of the collect-once/train-locally topology: job
     // count must NOT grow with BpeRounds (the old loop ran one job per
-    // merge). Counted via listener, parquet metadata jobs excluded — same
-    // technique as SimilaritySpec's laziness check.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (!js.stageInfos.exists(_.name.startsWith("parquet at"))) jobs.incrementAndGet()
+    // merge). Parquet metadata jobs are excluded (see jobsDuring).
+    val jobs = jobsDuring {
+      assert(Curation.bpeMerges(spark, sf).count() >= 2, "training learned no merges")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = Curation.bpeMerges(spark, sf).count()
-      assert(n >= 2, "training learned no merges")
-      Thread.sleep(1000) // listener bus is async; drain before reading
-      // the r9 frequency floor adds a CONSTANT two jobs to the collect
-      // (scalar total broadcast + pruned collect over the fenced counts);
-      // the contract under test is unchanged — job count must stay far
-      // below one-per-round
-      assert(jobs.get() < Curation.BpeRounds / 2 + 2,
-        s"bpe training launched ${jobs.get()} jobs for ${Curation.BpeRounds} rounds" +
-          " — the per-merge job loop is back")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the r9 frequency floor adds a CONSTANT two jobs to the collect
+    // (scalar total broadcast + pruned collect over the fenced counts);
+    // the contract under test is unchanged — job count must stay far
+    // below one-per-round
+    assert(jobs < Curation.BpeRounds / 2 + 2,
+      s"bpe training launched $jobs jobs for ${Curation.BpeRounds} rounds" +
+        " — the per-merge job loop is back")
   }
 
   test("bpe vocabulary collect is frequency-floor bounded (VERDICT r8 ask #5)") {

@@ -72,25 +72,35 @@ class DedupSpec extends SparkSpec {
     assert(curve.head._2 > curve.head._4, "r=2 admitted no false candidate — precision arm vacuous")
   }
 
-  test("near-dup clusters match a driver-side union-find over the same pairs") {
-    import spark.implicits._
-    val pairs = Dedup.minhashPairs(spark, sf)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect()
-    // independent ground truth: textbook union-find with path compression
+  /** connectedComponents' two forms: the driver union-find under the
+    * default broadcast threshold, the distributed hash-min rounds with
+    * broadcasts off (threshold -1). The suffix keeps the default-gate
+    * test names unchanged. */
+  private val gates = Seq("" -> None, " (distributed rounds)" -> Some("-1"))
+  private def underGate[T](gate: Option[String])(body: => T): T =
+    gate.fold(body)(g => withConf("spark.sql.autoBroadcastJoinThreshold" -> g)(body))
+
+  /** Union-find ground truth over `pairs`, written independently of the
+    * operator: (node, component minimum, node == minimum). Roots ARE
+    * component minima because unions always point the larger root at the
+    * smaller one. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Set[(Long, Long, Boolean)] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
     for ((a, b) <- pairs) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra max rb) = ra min rb }
-    // canonical label = min member per component
-    val members = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val want = members.map { m =>
-      val root = find(m)
-      (m, root, m == root)
-    }.toSet
-    // union-find roots ARE component minima here because unions always point
-    // the larger root at the smaller one
+    pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .map { m => val root = find(m); (m, root, m == root) }.toSet
+  }
+
+  test("near-dup clusters match a driver-side union-find over the same pairs") {
+    import spark.implicits._
+    val pairs = Dedup.minhashPairs(spark, sf)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect()
+    // independent ground truth: textbook union-find with path compression
+    val want = unionFindLabels(pairs.toSeq)
     val got = Dedup.neardupClusters(spark, sf)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(got == want)
@@ -101,39 +111,57 @@ class DedupSpec extends SparkSpec {
     assert(bad.count() == 0)
   }
 
-  test("connected components propagate across chains (multi-round convergence)") {
-    import spark.implicits._
-    // a 5-node chain plus a separate pair: hash-min needs MULTIPLE rounds
-    // here (the corpus's clique-like clusters converge in one), so this
-    // pins the iterative propagation itself, incl. transitivity
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(pairs)
-      .as[(Long, Long, Boolean)].collect().toSet
-    val want = Set(
-      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (4L, 1L, false), (5L, 1L, false),
-      (10L, 10L, true), (11L, 10L, false))
-    assert(got == want)
+  for ((suffix, gate) <- gates)
+    test("connected components of the near-dup pairs match a union-find" + suffix) {
+      import spark.implicits._
+      val pairs = Dedup.minhashPairsRaw(spark, sf).select("doc_a", "doc_b")
+      val want = unionFindLabels(pairs.as[(Long, Long)].collect().toSeq)
+      assert(want.exists(!_._3), "fixture has no near-dup pair — test is vacuous")
+      val got = underGate(gate)(Dedup.connectedComponents(pairs)
+        .as[(Long, Long, Boolean)].collect().toSet)
+      assert(got == want)
+    }
+
+  test("connected components of driver-sized pairs take O(1) jobs, not two per round") {
+    val pairs = Dedup.minhashPairsRaw(spark, sf).select("doc_a", "doc_b").localCheckpoint()
+    // re-checkpoint (materialized by the gate's count) + collect; the
+    // union-find itself runs no job
+    val driver = jobsDuring(Dedup.connectedComponents(pairs).collect())
+    assert(driver <= 4, s"connectedComponents launched $driver jobs beyond its pair input")
+    // the distributed rounds cost more on the same input: the bound above
+    // separates the two forms
+    val rounds = underGate(Some("-1"))(jobsDuring(Dedup.connectedComponents(pairs).collect()))
+    assert(rounds > 4, s"distributed rounds launched only $rounds jobs")
   }
 
-  test("connected components of an empty pair list are empty") {
-    import spark.implicits._
-    val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(Dedup.connectedComponents(none).count() == 0)
-  }
+  for ((suffix, gate) <- gates)
+    test("connected components propagate across chains (multi-round convergence)" + suffix) {
+      import spark.implicits._
+      // a 5-node chain plus a separate pair: hash-min needs MULTIPLE rounds
+      // here (the corpus's clique-like clusters converge in one), so this
+      // pins the iterative propagation itself, incl. transitivity
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+        .toDF("doc_a", "doc_b")
+      val got = underGate(gate)(Dedup.connectedComponents(pairs)
+        .as[(Long, Long, Boolean)].collect().toSet)
+      val want = Set(
+        (1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (4L, 1L, false), (5L, 1L, false),
+        (10L, 10L, true), (11L, 10L, false))
+      assert(got == want)
+    }
+
+  for ((suffix, gate) <- gates)
+    test("connected components of an empty pair list are empty" + suffix) {
+      import spark.implicits._
+      val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+      assert(underGate(gate)(Dedup.connectedComponents(none).count()) == 0)
+    }
 
   test("embedding clusters match a driver-side union-find over embedding pairs") {
     import spark.implicits._
     val pairs = Dedup.embeddingPairs(spark, sf)
       .select("vec_a", "vec_b").as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    for ((a, b) <- pairs) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra max rb) = ra min rb }
-    val members = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val want = members.map { m => val root = find(m); (m, root, m == root) }.toSet
+    val want = unionFindLabels(pairs.toSeq)
     val got = Dedup.embeddingClusters(spark, sf)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(got == want)

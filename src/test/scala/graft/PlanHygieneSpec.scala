@@ -12,13 +12,19 @@ package graft
   *
   * For the driver-iterative queries (q_textrank, the
   * q_neardup_clusters connected-components family, the k-means Lloyd
-  * trainer), `fn(spark, sf)` builds only the final presentation plan —
-  * each round's intermediate plan is checkpoint-truncated out of it. The
+  * trainer), `fn(spark, sf)` builds only the final presentation plan.
+  * TextRank and connected components have two paths, split by one gate
+  * (`Dedup.collectIfDriverSized`: row count × per-row size ≤
+  * `spark.sql.autoBroadcastJoinThreshold`). Under it — this fixture at
+  * the default threshold — the graph is collected and iterated on the
+  * driver, and the plan is a local frame. Above it, or at -1, each round
+  * runs on Spark and is checkpoint-truncated out of the final plan. The
   * per-round tests at the bottom therefore assert every iterative LOOP
-  * BODY directly, on its FULL lineage (a stricter check than the
-  * checkpointed form the loops actually run): the textrank rank update,
-  * one hash-min + pointer-halving components round ([[Dedup.ccRound]]),
-  * and one Lloyd assignment/re-centroid round
+  * BODY of the distributed path directly, on its FULL lineage (a
+  * stricter check than the checkpointed form the loops actually run):
+  * the textrank rank update ([[TextAnalysis.textrankRound]]), one
+  * hash-min + pointer-halving components round ([[Dedup.ccRound]]), and
+  * one Lloyd assignment/re-centroid round
   * ([[Similarity.lloydRoundCells]] — map-side only, zero joins). Round r
   * differs from round 1 only in label values / centroid literals, so one
   * round's plan represents all rounds. The BPE trainer no longer

@@ -53,5 +53,24 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Number of Spark jobs `body` launches on the shared context, not
+    * counting parquet footer/schema reads (stages named "parquet at …"),
+    * which depend on what earlier tests already read. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!js.stageInfos.exists(_.name.startsWith("parquet at"))) jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerBusShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftshim.ListenerBusShim.drain(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = spark.catalog.clearCache()
 }

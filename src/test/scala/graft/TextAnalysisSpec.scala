@@ -277,6 +277,37 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got.head._2 > got.last._2)
   }
 
+  test("textrank: the driver loop and the distributed rounds give bit-equal ranks for every word") {
+    import spark.implicits._
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.as[(String, Double)].collect()
+        .map { case (w, r) => w -> java.lang.Double.doubleToRawLongBits(r) }.toMap
+    val driverFrame = TextAnalysis.textrankRanks(spark, sf)
+    // the fixture's graph is under the default broadcast threshold, so this
+    // is the collected form; with broadcasts off the rounds run on Spark
+    assert(driverFrame.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val driver = ranks(driverFrame)
+    val distributed = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = TextAnalysis.textrankRanks(spark, sf)
+      assert(!df.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      ranks(df)
+    }
+    assert(driver.size > 20)
+    assert(driver == distributed)
+  }
+
+  test("constructing q_textrank in a fresh session launches at most 8 jobs") {
+    val fresh = spark.newSession()
+    try {
+      // the graph build's stages, the gate's count and the collect; the
+      // ten rounds run on the driver (the distributed rounds take ~3 each)
+      val jobs = jobsDuring(SparkEntry.queries("q_textrank")(fresh, sf))
+      assert(jobs <= 8, s"q_textrank construction launched $jobs jobs")
+    } finally operators.SessionMemos.evict(fresh)
+  }
+
   test("triangles: per-word counts match a brute-force in-memory enumeration") {
     import spark.implicits._
     val texts = Tables.documents(spark, sf).select("text").as[String].collect()
