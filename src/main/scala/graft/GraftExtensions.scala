@@ -7,7 +7,7 @@ import graft.functions._
 import graft.plans.{AsOfJoinStrategy, GroupTopKStrategy, MvRewriteRule, SimJoinRewriteRule, SkylineStrategy, SmallSortRule, TopKRewriteRule}
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`
-  * (spark-submit / SparkSession.builder config): injects every graft
+  * (a spark-submit or session-builder config): injects every graft
   * extension — the codegen'd scalar kernels as SQL functions, the
   * optimizer rules (window top-k, similarity join, materialized-view
   * rewrite), the planning strategies (GroupTopK, as-of join, skyline) and
@@ -15,14 +15,13 @@ import graft.plans.{AsOfJoinStrategy, GroupTopKStrategy, MvRewriteRule, SimJoinR
   * ORDER BY whose input AQE would read as one partition sorts in one task,
   * without the range-sampling job) —
   * at session build time, the idiomatic way a Spark library ships Catalyst
-  * extensions. The runtime registration paths
-  * (`VectorFunctions.register` / `TextHashFunctions.register` /
-  * `spark.experimental.*`) remain for sessions the harness has already
-  * created.
+  * extensions. This is the only place they are armed: no operator or
+  * loader registers a function, strategy or rule at run time.
   *
-  * The test sessions load this class via the config, so every suite runs
-  * with the extensions active (SparkSpec); TopKRewriteSpec separately
-  * asserts the rewrite is byte-identical to the window form.
+  * [[graft.Session.builder]] sets this class, so every session the repo
+  * builds (Bench, Verify, the dev mains and the test session in SparkSpec)
+  * runs with the extensions active; TopKRewriteSpec separately asserts the
+  * rewrite is byte-identical to the window form.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

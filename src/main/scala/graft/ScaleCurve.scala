@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured scaling curve for the dedup family (VERDICT r6 ask #3 / r7 #6)
@@ -33,12 +32,7 @@ object ScaleCurve {
     // never written)
     val rowFilter: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 32)
-      // events NTZ normalization is timezone-sensitive: pin UTC like
-      // Verify/Bench (ADVICE r8)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.builder(32)
       // measure the AT-SCALE plan at BOTH factors: auto-broadcast at toy
       // scale short-circuits the index shuffle on one factor but not the
       // other (observed r9: ppjoin's inverted index broadcast at n and
@@ -47,7 +41,7 @@ object ScaleCurve {
       // DELIBERATE broadcasts (bounded query panels via broadcast()/hint)
       // are unaffected by the threshold.
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // shuffle-record listener: stage-level write records, reset per query

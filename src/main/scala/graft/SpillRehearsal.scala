@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Bounded-memory spill rehearsal (dev tooling, like Bench/Verify): runs
   * the shingle-fence dedup family with the heap and the storage pool
@@ -29,12 +28,8 @@ object SpillRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val starve = args.length > 1 && args(1) == "starve"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val b = Session.builder(cpus)
     val spark =
       (if (starve)
         b.config("spark.memory.fraction", "0.05")

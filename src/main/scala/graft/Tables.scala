@@ -19,7 +19,7 @@ object Tables {
     *
     * `spark.read.parquet(path)` infers the schema by re-reading the file
     * footer on EVERY DataFrame construction — measured ~60 ms per call on
-    * this host vs ~5 ms with an explicit schema (Scratch probe, r16). The
+    * this host vs ~5 ms with an explicit schema (r16 probe). The
     * bench constructs each of 316 queries three times, most touching 1-4
     * table scans, so footer re-inference alone is tens of seconds of pure
     * metadata overhead. At production scale the same fix is what a real
@@ -65,10 +65,13 @@ object Tables {
     * The NTZ column is cast to TIMESTAMP before unix_micros; the session
     * timezone is UTC everywhere (Spark sessions and DuckDB), so the cast is a
     * pure reinterpretation with no wall-clock shift.
+    *
+    * The NANOS encoding reads as bigint only under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[Session.builder]] sets
+    * at build time; this loader does not change the session. A NANOS file
+    * read by a session built without it fails at read time.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    // Harmless when ts is already a timestamp; required for the ns-as-long era.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

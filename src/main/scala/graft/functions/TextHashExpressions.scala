@@ -498,14 +498,4 @@ object TextHashFunctions {
     ColumnShim.column(Bigrams(ColumnShim.expression(text)))
   def skipgramPairs(text: Column): Column =
     ColumnShim.column(SkipgramPairs(ColumnShim.expression(text)))
-
-  /** Make the kernels callable from SQL strings on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ColumnShim.registerFunction(spark, "graft_shingle_hashes", e => ShingleHashes(e.head))
-    ColumnShim.registerFunction(spark, "graft_winnow_hashes", e => WinnowHashes(e.head))
-    ColumnShim.registerFunction(spark, "graft_md5_top60", e => Md5Top60(e.head))
-    ColumnShim.registerFunction(spark, "graft_minhash_bands", e => MinHashBands(e.head))
-    ColumnShim.registerFunction(spark, "graft_simhash60", e => SimHash60(e.head))
-    ColumnShim.registerFunction(spark, "graft_jaccard_sorted", e => JaccardSorted(e(0), e(1)))
-  }
 }

@@ -414,16 +414,4 @@ object VectorFunctions {
     val pairs = for { i <- 0 until d; j <- i until d } yield (i.toLong, j.toLong)
     (pairs.map(_._1), pairs.map(_._2))
   }
-
-  /** Make the vector kernels callable from SQL strings on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ColumnShim.registerFunction(spark, "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)))
-    ColumnShim.registerFunction(spark, "graft_sqdist_long",
-      exprs => SqDistLong(exprs(0), exprs(1)))
-    ColumnShim.registerFunction(spark, "graft_dot_long",
-      exprs => DotLong(exprs(0), exprs(1)))
-    ColumnShim.registerFunction(spark, "graft_tri_products",
-      exprs => UpperTriProducts(exprs.head))
-  }
 }

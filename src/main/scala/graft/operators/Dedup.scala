@@ -231,14 +231,14 @@ object Dedup {
     * rule removes the CartesianProduct (asserted in SimJoinRewriteSpec —
     * 12.5M evaluated pairs at sf0.1 becomes a ~240k-collision hash join).
     *
-    * Install contract (r6 ask #5 — no session mutation): the rule must
-    * already be active, either injected by GraftExtensions at session
-    * build (`spark.sql.extensions=graft.GraftExtensions` — how SparkSpec,
-    * Verify and Bench sessions all run) or added to
+    * Install contract (no session mutation): the rule must already be
+    * active, either injected by GraftExtensions at session build
+    * ([[graft.Session.builder]] sets `spark.sql.extensions` — every
+    * session in the repo is built from it) or added to
     * `spark.experimental.extraOptimizations` BY THE CALLER. Absent both,
     * this fails fast with the install instruction instead of silently
-    * planning a 100 TB cartesian product — and no longer flips a
-    * session-global switch behind the caller's back.
+    * planning a 100 TB cartesian product; it never changes the session
+    * itself.
     */
   def simJoinDeclarative(spark: SparkSession, sfDir: String): DataFrame = {
     val rule = graft.plans.SimJoinRewriteRule

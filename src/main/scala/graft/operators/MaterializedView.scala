@@ -39,15 +39,12 @@ object MaterializedView {
   private def factPath(sfDir: String): String = s"$sfDir/lineitem.parquet"
 
   /** Build the cube parquet once per (session, sfDir), register the
-    * fact→cube mapping in [[MvRegistry]], arm the rewrite rule on
-    * sessions built without `spark.sql.extensions=graft.GraftExtensions`,
-    * and return the cube directory. */
+    * fact→cube mapping in [[MvRegistry]] and return the cube directory.
+    * The rewrite rule itself comes from [[graft.GraftExtensions]]; on a
+    * session built without it nothing rewrites, and [[mvServed]] refuses
+    * the fact-scanning plan. */
   private[graft] def cubeDir(spark: SparkSession, sfDir: String): String =
     cubeMemo.dir(spark, sfDir, "graft-mv-cube") { dir =>
-      if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ MvRewriteRule
-
       val fact = Tables.lineitem(spark, sfDir)
       fact.groupBy(
           col("l_returnflag"), col("l_linestatus"),

@@ -366,9 +366,7 @@ object Relational {
   def asOfJoinCustom(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val p = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("p_us"))
     val c = Tables.events(spark, sfDir).filter(col("event_type") === "click")
@@ -394,9 +392,7 @@ object Relational {
                         tolUs: Long = 1800000000L): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val p = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("p_us"))
     val c = Tables.events(spark, sfDir).filter(col("event_type") === "click")
@@ -420,9 +416,7 @@ object Relational {
   def asOfJoinForward(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val p = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("p_us"))
     val c = Tables.events(spark, sfDir).filter(col("event_type") === "click")
@@ -447,9 +441,7 @@ object Relational {
   def asOfJoinPayload(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val p = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("p_us"))
     val c = Tables.events(spark, sfDir).filter(col("event_type") === "click")
@@ -645,9 +637,7 @@ object Relational {
   private[graft] def skylineNativeOf(spark: SparkSession, parts: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{Skyline, SkylineStrategy}
-    if (!spark.experimental.extraStrategies.contains(SkylineStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ SkylineStrategy
+    import graft.plans.Skyline
     val analyzed = parts.queryExecution.analyzed
     val Seq(_, price, size) = analyzed.output
     // both criteria explicitly cast: the exec contract is Double/Long

@@ -227,12 +227,12 @@ object Sources {
     * partition overwrite — the restatement primitive of every partitioned
     * warehouse. The initial load is BROKEN for the earliest year (orders
     * with key ≡ 0 mod 7 missing — a partial extract); the fix job then
-    * rewrites ONLY that year under
-    * `spark.sql.sources.partitionOverwriteMode=dynamic`, which replaces
-    * exactly the partitions present in the incoming frame. STATIC mode
-    * would have deleted every other year first; serving all years green
-    * against the full-table oracle therefore proves both the restatement
-    * AND that untouched partitions survived. */
+    * rewrites ONLY that year with the per-write option
+    * `partitionOverwriteMode=dynamic` (the session conf is left as it is),
+    * which replaces exactly the partitions present in the incoming frame.
+    * STATIC mode would have deleted every other year first; serving all
+    * years green against the full-table oracle therefore proves both the
+    * restatement AND that untouched partitions survived. */
   private[graft] def overwriteDir(spark: SparkSession, sfDir: String): String =
     overwriteMemo.dir(spark, sfDir, "graft-dynpart-src") { dir =>
       // fenced: the min-year collect and the two writes are three jobs —
@@ -244,15 +244,9 @@ object Sources {
         val firstYear = o.agg(min("o_year")).head.getInt(0) // bounded: 1-row agg
         o.filter(col("o_year") =!= firstYear || col("o_orderkey") % 7 =!= 0)
           .write.partitionBy("o_year").mode("overwrite").parquet(dir)
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
-          o.filter(col("o_year") === firstYear)
-            .write.partitionBy("o_year").mode("overwrite").parquet(dir)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        o.filter(col("o_year") === firstYear)
+          .write.partitionBy("o_year").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(dir)
       } finally o.unpersist()
     }
 

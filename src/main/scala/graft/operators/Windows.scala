@@ -196,9 +196,7 @@ object Windows {
   def topKPerUserCustom(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, SortOrder}
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{GroupTopK, GroupTopKStrategy}
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GroupTopKStrategy
+    import graft.plans.GroupTopK
     val ev = Tables.events(spark, sfDir).select(col("user_id"), col("event_id"), col("value"))
     val analyzed = ev.queryExecution.analyzed
     val Seq(u, e, v) = analyzed.output

@@ -26,8 +26,11 @@ import scala.collection.mutable
   * and k=3 peaks at a few MB of heap state per task and shuffles only
   * map-tasks × groups × k rows.
   *
-  * Registered per-session via `spark.experimental.extraStrategies` (the
-  * public hook that works on harness-created sessions).
+  * Planned by [[GroupTopKStrategy]], which [[graft.GraftExtensions]]
+  * injects at session build ([[graft.Session.builder]]). A session built
+  * without the extensions has no strategy for the node and fails at
+  * planning ("No plan for GroupTopK", wrapped in Spark's internal-error
+  * exception).
   */
 case class GroupTopK(groupExprs: Seq[Expression], ordering: Seq[SortOrder],
                      k: Int, rankAttr: Attribute, child: LogicalPlan)

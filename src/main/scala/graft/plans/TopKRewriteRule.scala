@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Optimizer rule (Rule[LogicalPlan], registered per-session via
-  * `spark.experimental.extraOptimizations`): rewrites the classic window
+/** Optimizer rule (Rule[LogicalPlan], injected at session build by
+  * [[graft.GraftExtensions]]): rewrites the classic window
   * top-k idiom
   *
   *   Filter(rn <= k, Window [row_number() OVER (PARTITION BY p ORDER BY o)

@@ -21,14 +21,4 @@ object ColumnShim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Register an Expression builder under a SQL-callable name in the
-    * session's FunctionRegistry (the runtime equivalent of a
-    * SparkSessionExtensions.injectFunction, usable on a session the harness
-    * already created).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

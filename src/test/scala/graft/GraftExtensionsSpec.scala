@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** The spark.sql.extensions entry point must make every graft extension
   * available with NO runtime registration calls — the shared test session
-  * (SparkSpec) loads `graft.GraftExtensions` via config.
+  * (SparkSpec) is built by `graft.Session.builder`, which loads
+  * `graft.GraftExtensions` via config.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -30,5 +31,38 @@ class GraftExtensionsSpec extends SparkSpec {
       s"expected GroupTopK in:\n${df.queryExecution.optimizedPlan}")
     // and the strategy plans it: the query actually runs
     assert(df.count() > 0)
+  }
+
+  test("sessions are armed once: one builder, no runtime re-arming in src/main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root; no $root here")
+    val walk = Files.walk(root)
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.exists(_.endsWith("graft/Session.scala")))
+    def hits(ps: Seq[Path], pattern: scala.util.matching.Regex): Seq[String] =
+      ps.flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if pattern.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+      })
+    val builders = hits(sources.filterNot(_.endsWith("graft/Session.scala")),
+      """SparkSession\.builder""".r)
+    assert(builders.isEmpty,
+      s"SparkSession built outside graft.Session (use Session.builder):\n${builders.mkString("\n")}")
+    val rearmed = hits(sources, """experimental\.extra\w+\s*[:+]*=(?!=)""".r)
+    assert(rearmed.isEmpty,
+      s"runtime strategy/rule append (GraftExtensions injects it):\n${rearmed.mkString("\n")}")
+    val operatorCode = sources.filter { p =>
+      val s = root.relativize(p).toString
+      Seq("graft/operators/", "graft/streaming/", "graft/plans/").exists(s.startsWith) ||
+        s == "graft/Tables.scala"
+    }
+    val confWrites = hits(operatorCode, """conf\.(set|unset)\(""".r)
+    assert(confWrites.isEmpty,
+      s"operator or loader changes the session conf:\n${confWrites.mkString("\n")}")
+    val tempFns = hits(sources, """createOrReplaceTempFunction""".r)
+    assert(tempFns.isEmpty,
+      s"runtime SQL-function registration (GraftExtensions injects it):\n${tempFns.mkString("\n")}")
   }
 }

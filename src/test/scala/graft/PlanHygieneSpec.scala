@@ -30,19 +30,39 @@ package graft
   * round's plan represents all rounds. The BPE trainer no longer
   * iterates Spark jobs at all (driver-local replay over the collected
   * vocabulary).
+  *
+  * The suite runs on its own fresh session, so the first test also checks
+  * that constructing every registered query leaves the session as it was
+  * built: the same conf, planner strategies and optimizer rules. The
+  * session is freed with its memos and artifacts after the suite.
   */
 class PlanHygieneSpec extends SparkSpec {
+
+  override lazy val spark: org.apache.spark.sql.SparkSession = SparkSpec.spark.newSession()
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally graft.operators.SessionMemos.evict(spark)
 
   /** Documented exceptions — EMPTY since r9: no registered query may plan
     * a deliberate nested loop (the theta-join BNLJ demo is unregistered). */
   private val allowNestedLoop = Set.empty[String]
 
   test("no query plans a CartesianProduct") {
+    def arming = (spark.conf.getAll, spark.experimental.extraStrategies,
+      spark.experimental.extraOptimizations)
+    val (conf0, strategies0, rules0) = arming
     val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.executedPlan.toString
       if (plan.contains("CartesianProduct")) Some(name) else None
     }
     assert(offenders.isEmpty, s"cartesian products in: ${offenders.sorted.mkString(", ")}")
+    // constructing the queries must not change the session they run on
+    val (conf1, strategies1, rules1) = arming
+    assert(conf1 == conf0, "query construction changed the session conf: " +
+      s"${(conf1.toSet diff conf0.toSet).mkString(", ")} (was " +
+      s"${(conf0.toSet diff conf1.toSet).mkString(", ")})")
+    assert(strategies1 == strategies0, s"query construction added strategies: $strategies1")
+    assert(rules1 == rules0, s"query construction added optimizer rules: $rules1")
   }
 
   /** BNLJ whose broadcast side is BOUNDED by documented design (not a

@@ -157,9 +157,7 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val leftGen = Gen.nonEmptyListOf(
       Gen.zip(Gen.choose(0L, 4L), Gen.choose(0L, 50L)))
     val rightGen = Gen.listOf(Gen.zip(Gen.choose(0L, 4L), Gen.choose(0L, 50L)))
@@ -187,9 +185,7 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, SortOrder}
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{GroupTopK, GroupTopKStrategy}
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GroupTopKStrategy
+    import graft.plans.GroupTopK
     val rowsGen = Gen.nonEmptyListOf(
       Gen.zip(Gen.choose(0L, 5L), Gen.choose(0L, 1000L), Gen.choose(-100.0, 100.0)))
     samples(rowsGen, 8).foreach { rows =>

@@ -56,10 +56,8 @@ class RelationalSpec extends SparkSpec {
                           forward: Boolean, tolerance: Long): Seq[(Long, Long, Long)] = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
+    import graft.plans.AsOfJoin
     import spark.implicits._
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val l = leftRows.toDF("k", "t").selectExpr("k", "t")
     val r = rightRows.toDF("rk", "rt")
     val la = l.queryExecution.analyzed

@@ -135,7 +135,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_dot is callable from SQL after registration") {
-    graft.functions.VectorFunctions.register(spark)
     val r = spark.sql("SELECT graft_dot(array(1D, 2D, 3D), array(4D, 5D, 6D)) AS d")
       .head.getDouble(0)
     assert(r == 32.0)

@@ -11,16 +11,10 @@ import org.scalatest.BeforeAndAfterAll
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the whole suite runs with the library's extensions installed the
-      // idiomatic way — functions, optimizer rule, planner strategy
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the whole suite runs on the same factory as Bench and Verify, so the
+    // library's extensions are installed the idiomatic way — functions,
+    // optimizer rules, planner strategies
+    val s = Session.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

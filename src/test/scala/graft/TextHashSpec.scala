@@ -201,7 +201,6 @@ class TextHashSpec extends SparkSpec {
   }
 
   test("kernels are SQL-callable after registration") {
-    register(spark)
     val n = spark.sql(
       "SELECT graft_simhash60(graft_shingle_hashes('a b c d')) AS f").head.getLong(0)
     assert(n != 0L)
