@@ -336,13 +336,10 @@ object ScaleCurve {
       // both track the corpus ~linearly (the r9 form's bench side grew
       // with the fixture and compute went x100)
       "semantic_decon" -> ((d, _) => Similarity.semanticDecontaminate(spark, d)),
-      // r13: the two PCA routes. pca_power trains per dir (memo keys on
-      // the dir) — per-round shuffle is 64 cells x partitions, corpus-
-      // INDEPENDENT, so shuffle rows should stay ~flat while wall tracks
-      // the 64 scans. pca_cov is ONE scan whose 2080-cell aggregate
-      // partial-combines map-side — shuffle rows ~flat (2080 x
-      // partitions) while the map-side product fan-out grows linearly.
-      "pca_power"     -> ((d, _) => Similarity.pcaPower(spark, d)),
+      // pca_cov is ONE scan whose 2080-cell aggregate partial-combines
+      // map-side — shuffle rows ~flat (2080 x partitions) while the
+      // map-side product fan-out grows linearly. Every PCA trainer runs
+      // on this matrix, so it is the family's one scale row.
       "pca_cov"       -> ((d, _) => Similarity.pcaCov(spark, d)))
     // r10 late additions: per-user-window vs domain-frame cost shapes on
     // the events fixture, snapshot diff on the orders fixture, and the

@@ -2312,10 +2312,9 @@ object Similarity {
     * power method's worst case: 64 rounds reach Rayleigh ≥ 0.999·λ1 on
     * the sf0.001/sf0.01 slices (SimilaritySpec pins the sf0.001 bound
     * against an independent Jacobi eigensolve), while the sf0.1 slice is
-    * more degenerate still — which is exactly why [[pcaCov]] exists: at
-    * small d the production path aggregates the exact covariance in one
-    * pass and eigensolves driver-side, and the iterate is the d-too-
-    * large-for-d² fallback. */
+    * more degenerate still — which is why [[pcaTopk]] eigensolves the
+    * same scatter matrix instead of iterating. Each round is a driver
+    * mat-vec over [[pcaCovMatrix]], so the count costs no corpus pass. */
   val PcaRounds = 64
 
   /** Loading scale: the eigenvector lives in max-norm micro-units
@@ -2327,62 +2326,42 @@ object Similarity {
 
   private val PcaDim = 64
 
-  /** TOP PRINCIPAL COMPONENT via matrix-free power iteration, in EXACT
-    * integer arithmetic end-to-end (Mises & Pollaczek-Geiringer 1929 —
-    * the standard dominant-eigenvector iteration; matrix-free formulation
-    * as in distributed PCA surveys, e.g. Halko et al. 2011 §4):
+  /** TOP PRINCIPAL COMPONENT via power iteration, in EXACT integer
+    * arithmetic end-to-end (Mises & Pollaczek-Geiringer 1929 — the
+    * standard dominant-eigenvector iteration):
     *
-    *   v_{r+1}  ∝  C·v_r  =  Σ_i ((x_i − μ)·v_r)·(x_i − μ)
+    *   v_{r+1}  ∝  S·v_r  =  Σ_i ((x_i − μ)·v_r)·(x_i − μ)
     *
-    * so each round never materializes the 64×64 covariance — it is ONE
-    * map-side pass (per-row dot d_i = dv·v against the LITERAL v, then
-    * d_i·dv re-scaled into 64 partial sums) feeding a single 64-cell
-    * global aggregate. The driver holds only the 64-long eigenvector
-    * between rounds — the k-means driver-local-trainer pattern, with a
-    * 64-cell (not k×64) round state.
+    * The corpus is read ONCE, into the exact 64×64 scatter matrix S
+    * ([[pcaCovMatrix]], 2080 cells — one Gramian pass, then local work,
+    * as MLlib's RowMatrix.computePrincipalComponents does at small d);
+    * every round is a driver BigInt mat-vec over S, bit-equal to the
+    * corpus sum on the right because both are exact integer sums of the
+    * same products.
     *
     * Exactness discipline (the reason this is hash-checkable at all):
     *   - vectors quantized to micro-unit bigints ([[quantizedVectors]],
     *     shared with k-means);
     *   - mean μ = truncating per-dimension integer division (positive
     *     domain, so floor = truncate in both engines);
-    *   - the w = Σ d·dv sums run in DECIMAL(38,0) (Spark) / HUGEINT
-    *     (DuckDB) — order-insensitive exact integer addition, immune to
-    *     partitioning (|w| ≤ n·64·(2e6·1e6)·2e6 ≈ 1e24 at 10⁹ rows);
+    *   - S is summed in DECIMAL(38,0) (Spark) and S·v runs in BigInt; the
+    *     oracle replays the rounds over the corpus in HUGEINT (DuckDB) —
+    *     order-insensitive exact integer addition, immune to partitioning;
     *   - normalization is max-norm with the sign-abs construction
     *     sign(w)·(|w|·1e6 div max|w|) so truncating (Spark div, BigInt /)
     *     and flooring (DuckDB //) division agree on negatives.
     *
     * Output: the trained model — one row per dimension (pos, loading)
-    * plus the explained-variance ppm (Rayleigh quotient over total
-    * variance, computed in-plan from the same exact sums and repeated per
-    * row). 100 TB shape: rounds cost one fact scan each with a 64-cell
-    * shuffle — corpus-size-independent round state, like the Lloyd loop.
+    * plus the explained-variance ppm ([[pcaExplainedPpm]]) repeated per
+    * row — a 64-row local frame; construction costs the centering-mean
+    * and scatter passes, and no round touches the corpus.
     */
   def pcaPower(spark: SparkSession, sfDir: String): DataFrame = {
-    val deltas = pcaDeltas(spark, sfDir)
     val v = trainedPc1(spark, sfDir)
-    val vtv: BigInt = v.map(x => BigInt(x) * BigInt(x)).sum
-    // final pass: Rayleigh numerator Σd² and total variance (trace) — one
-    // 2-cell exact aggregate; explained_ppm = ((Σd² div trace)·1e6) div vᵀv,
-    // truncations in this order on BOTH engines.
-    // truncation order sd2 div trace FIRST: that ratio is bounded by vᵀv
-    // (≤ 6.4e13) regardless of corpus size, so no intermediate grows with
-    // n — the orderings that divide by vᵀv first overflow a long (or
-    // DECIMAL(38,0)) once n passes ~10⁴ rows
-    val ex = pcaWithD(deltas, v).agg(
-      sum(col("d").cast("decimal(38,0)") * col("d")).as("sd2"),
-      sum(dotLong(col("dv"), col("dv"))
-        .cast("decimal(38,0)")).as("trace"))
-      .select(expr(
-        s"cast((sd2 div trace) as decimal(38,0)) * 1000000 div cast($vtv as decimal(38,0))")
-        .as("explained_ppm"))
+    val ppm = pcaExplainedPpm(pcaCovMatrix(spark, sfDir), v)
     import spark.implicits._
-    // broadcast side = a groupless aggregate (one scalar row) — the one
-    // BNLJ shape PlanHygieneSpec admits
-    v.toSeq.zipWithIndex.map { case (l, i) => (i.toLong, l) }
-      .toDF("pos", "loading")
-      .crossJoin(broadcast(ex))
+    v.toSeq.zipWithIndex.map { case (l, i) => (i.toLong, l, ppm) }
+      .toDF("pos", "loading", "explained_ppm")
       .orderBy("pos")
   }
 
@@ -2411,17 +2390,17 @@ object Similarity {
     * SimilaritySpec measures the round-(R−1)→R loading drift with it. */
   private[graft] def trainPc1Rounds(spark: SparkSession, sfDir: String,
                                     rounds: Int): Array[Long] = {
-    val deltas = pcaDeltas(spark, sfDir)
+    val s = pcaCovMatrix(spark, sfDir)
     (1 to rounds).foldLeft(Array.fill(PcaDim)(PcaScale)) { (v, _) =>
-      pcaNormalize(pcaRoundW(deltas, v))
+      pcaNormalize(pcaMatVec(s, v))
     }
   }
 
   /** Centered micro-unit corpus (vec_id, dv): μ is ONE exact 64-cell
     * aggregate (truncating integer division, positive domain), then the
     * centering is a map-side zip against the literal μ. PERSISTED but
-    * deliberately NOT fenced: every consumer (rounds, stats, scores,
-    * covariance) is a global aggregate or map-side pass, so the fence's
+    * deliberately NOT fenced: every consumer (scatter cells, scores,
+    * verification) is a global aggregate or map-side pass, so the fence's
     * co-locating repartition would be the family's ONLY corpus-tracking
     * shuffle — ScaleCurve measured it as exactly the +18k shuffle-row
     * growth at 10×; without it the spectral family's shuffle is
@@ -2468,36 +2447,32 @@ object Similarity {
   private def pcaWithD(deltas: DataFrame, v: Array[Long]): DataFrame =
     deltas.withColumn("d", dotLong(col("dv"), typedlit(v.toSeq)))
 
-  /** ONE power round's distributed body: the 64-cell w = Σ_i d_i·dv_i
-    * exact DECIMAL aggregate (package-private so PlanHygieneSpec asserts
-    * the per-round plan: map-side dot + one global hash aggregate, no
-    * join of any kind — round r differs from round 1 only in the literal
-    * eigenvector). Collected by the driver (64 decimals) and normalized
-    * in BigInt. */
-  private[graft] def pcaRoundCells(deltas: DataFrame, v: Array[Long]): DataFrame =
-    pcaWithD(deltas, v).agg(
-      sum(col("d").cast("decimal(38,0)") * element_at(col("dv"), 1)).as("w1"),
-      (2 to PcaDim).map(i =>
-        sum(col("d").cast("decimal(38,0)") * element_at(col("dv"), i)).as(s"w$i")): _*)
-
-  private def pcaRoundW(deltas: DataFrame, v: Array[Long]): Array[BigInt] = {
-    val r = pcaRoundCells(deltas, v).collect()(0)
-    (0 until PcaDim).map(i => BigInt(r.getDecimal(i).toBigIntegerExact)).toArray
-  }
+  /** w = S·v in exact BigInt — equal to Σ_i (dv_i·v)·dv_i over the
+    * corpus, integer for integer. */
+  private def pcaMatVec(s: Array[Array[BigInt]], v: Array[Long]): Array[BigInt] =
+    s.map(row => (0 until PcaDim).map(j => row(j) * v(j)).sum)
 
   /** max-norm normalize in exact BigInt: sign(w)·(|w|·1e6 / max|w|) with
     * truncating division on the POSITIVE magnitude — the construction the
     * oracle mirrors with its CASE/sign-abs form. */
   private def pcaNormalize(w: Array[BigInt]): Array[Long] = {
     val mx = w.map(_.abs).max
-    require(mx > 0, "pca: C·v vanished — degenerate corpus or orthogonal start")
+    require(mx > 0, "pca: S·v vanished — degenerate corpus or orthogonal start")
     w.map(x => (x.abs * PcaScale / mx * x.signum).toLong)
   }
 
-  /** [[pcaRoundCells]] wired to the corpus at the all-ones start vector —
-    * the PlanHygieneSpec probe (same role as [[lloydRoundFor]]). */
-  private[graft] def pcaRoundFor(spark: SparkSession, sfDir: String): DataFrame =
-    pcaRoundCells(pcaDeltas(spark, sfDir), Array.fill(PcaDim)(PcaScale))
+  /** Explained variance of component `v` in ppm:
+    * ((vᵀSv div tr S)·1e6) div vᵀv, where vᵀSv is the Rayleigh numerator
+    * Σ(dv·v)² and tr S the total variance Σ‖dv‖². The truncation order is
+    * the oracle's: vᵀSv div tr S is bounded by vᵀv (≤ 6.4e13) whatever the
+    * corpus size, so no intermediate grows with n. */
+  private def pcaExplainedPpm(s: Array[Array[BigInt]], v: Array[Long]): Long = {
+    val sv = pcaMatVec(s, v)
+    val vsv = (0 until PcaDim).map(i => sv(i) * v(i)).sum
+    val trace = (0 until PcaDim).map(i => s(i)(i)).sum
+    val vtv = v.map(x => BigInt(x) * x).sum
+    (vsv / trace * 1000000 / vtv).toLong
+  }
 
   /** Deflated power-iteration rounds for the SECOND component. 32, not
     * [[PcaRounds]]: hash-correctness never depends on convergence (the
@@ -2505,8 +2480,8 @@ object Similarity {
     * corpus the λ2/λ3 gap is even thinner than λ1/λ2 — no realistic
     * round count converges, which is precisely why [[pcaTopk]]'s exact
     * eigensolve is the production route for BOTH trailing components.
-    * The iterate exists as the d-too-large-for-d² serve path and to make
-    * the 2-component projection fully SQL-replayable. */
+    * The iterate exists to make the 2-component projection fully
+    * SQL-replayable. */
   val Pc2Rounds = 32
 
   /** Session memo for the PC2 iterate (64 longs — bounded driver state). */
@@ -2523,21 +2498,19 @@ object Similarity {
 
   /** SECOND PRINCIPAL COMPONENT via DEFLATED power iteration (Hotelling
     * deflation, the classical sequential-component construction): each
-    * round is the [[pcaRoundCells]] distributed body against the current
-    * iterate, then the driver projects the 64-cell result off the
-    * TRAINED PC1 — w' = w − (w·v1 div v1ᵀv1)·v1, all exact BigInt with
-    * sign-abs truncating division — and max-norm normalizes. Repeated
-    * projection keeps the iterate ⊥ v1 up to quantization even though
-    * the quantized v1 is not an exact eigenvector. Round state is one
-    * 64-long vector; the corpus is touched once per round, exactly like
-    * PC1 — nothing here tracks n. */
+    * round is the driver mat-vec w = S·u over [[pcaCovMatrix]], then the
+    * driver projects w off the TRAINED PC1 — w' = w − (w·v1 div v1ᵀv1)·v1,
+    * all exact BigInt with sign-abs truncating division — and max-norm
+    * normalizes. Repeated projection keeps the iterate ⊥ v1 up to
+    * quantization even though the quantized v1 is not an exact
+    * eigenvector. No round touches the corpus. */
   private[graft] def trainPc2Rounds(spark: SparkSession, sfDir: String,
                                     rounds: Int): Array[Long] = {
-    val deltas = pcaDeltas(spark, sfDir)
+    val s = pcaCovMatrix(spark, sfDir)
     val v1 = trainedPc1(spark, sfDir)
     val vv1: BigInt = v1.map(x => BigInt(x) * BigInt(x)).sum
     (1 to rounds).foldLeft(Array.fill(PcaDim)(PcaScale)) { (u, _) =>
-      val w = pcaRoundW(deltas, u)
+      val w = pcaMatVec(s, u)
       val num = (0 until PcaDim).map(i => w(i) * BigInt(v1(i)))
         .foldLeft(BigInt(0))(_ + _)
       val q = signAbsDiv(num, vv1)
@@ -2558,32 +2531,21 @@ object Similarity {
     * one pair-aggregate, one sign-abs projection quotient, one sign-abs
     * max-norm — in exact HUGEINT, and reads the same truncation-ordered
     * ppms. Scale shape: two map-side literal-vector projections in ONE
-    * pass over the memoized deltas + one 3-cell exact aggregate for the
-    * ppms; zero joins, zero corpus-tracking shuffle.
+    * pass over the memoized deltas; the ppms are literals computed from
+    * the scatter matrix ([[pcaExplainedPpm]]); zero joins, zero
+    * corpus-tracking shuffle.
     */
   def pcaScores2(spark: SparkSession, sfDir: String): DataFrame = {
-    val deltas = pcaDeltas(spark, sfDir)
+    val s = pcaCovMatrix(spark, sfDir)
     val v1 = trainedPc1(spark, sfDir)
     val v2 = trainedPc2(spark, sfDir)
-    val vtv1: BigInt = v1.map(x => BigInt(x) * BigInt(x)).sum
-    val vtv2: BigInt = v2.map(x => BigInt(x) * BigInt(x)).sum
     def dot(v: Array[Long]) = dotLong(col("dv"), typedlit(v.toSeq))
-    val withD = deltas.withColumn("d1", dot(v1)).withColumn("d2", dot(v2))
-    // same n-independent truncation order as pcaPower: (sd div trace) first
-    val ex = withD.agg(
-        sum(col("d1").cast("decimal(38,0)") * col("d1")).as("sd1"),
-        sum(col("d2").cast("decimal(38,0)") * col("d2")).as("sd2"),
-        sum(dotLong(col("dv"), col("dv"))
-          .cast("decimal(38,0)")).as("trace"))
-      .select(
-        expr(s"cast((sd1 div trace) as decimal(38,0)) * 1000000 div cast($vtv1 as decimal(38,0))")
-          .as("explained1_ppm"),
-        expr(s"cast((sd2 div trace) as decimal(38,0)) * 1000000 div cast($vtv2 as decimal(38,0))")
-          .as("explained2_ppm"))
-    withD.select(col("vec_id"),
+    pcaDeltas(spark, sfDir).withColumn("d1", dot(v1)).withColumn("d2", dot(v2))
+      .select(col("vec_id"),
         expr(s"cast(sign(d1) as bigint) * (abs(d1) div ${PcaScale})").as("score1_mu"),
-        expr(s"cast(sign(d2) as bigint) * (abs(d2) div ${PcaScale})").as("score2_mu"))
-      .crossJoin(broadcast(ex))
+        expr(s"cast(sign(d2) as bigint) * (abs(d2) div ${PcaScale})").as("score2_mu"),
+        lit(pcaExplainedPpm(s, v1)).as("explained1_ppm"),
+        lit(pcaExplainedPpm(s, v2)).as("explained2_ppm"))
       .orderBy("vec_id")
   }
 
@@ -2813,8 +2775,9 @@ object Similarity {
     *     eigenvector of the data, not just of the collected cells;
     *   - orth_ok: |v1·v2| ≤ 1e-3·‖v1‖‖v2‖ (quantization-tolerant);
     *   - order_ok: R1 ≥ R2;
-    *   - top_beats_iterate: R1 ≥ the power iterate's own Rayleigh —
-    *     the exact route can only improve on the 64-round iterate.
+    *   - top_beats_iterate: R1 ≥ the Rayleigh quotient of
+    *     [[trainedPc1]] (64 power rounds over the same S) — the
+    *     eigensolve can only improve on the iteration.
     */
   def pcaTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val deltas = pcaDeltas(spark, sfDir)

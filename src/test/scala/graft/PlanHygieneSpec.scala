@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /** Plan hygiene over the ENTIRE registered query surface: build every
   * `SparkEntry.queries` physical plan at sf0.001 and assert the
   * scale-safety invariants SCALE.md claims — no CartesianProduct and no
@@ -42,6 +45,13 @@ class PlanHygieneSpec extends SparkSpec {
 
   override def afterAll(): Unit =
     try super.afterAll() finally graft.operators.SessionMemos.evict(spark)
+
+  /** Every node `pf` matches in `p`, including inside each
+    * AdaptiveSparkPlanExec's input plan (see the BNLJ test below). */
+  private def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    p.collect(pf) ++
+      p.collect { case a: AdaptiveSparkPlanExec => a }
+        .flatMap(a => deepCollect(a.inputPlan)(pf))
 
   /** Documented exceptions — EMPTY since r9: no registered query may plan
     * a deliberate nested loop (the theta-join BNLJ demo is unregistered). */
@@ -129,14 +139,8 @@ class PlanHygieneSpec extends SparkSpec {
     // AdaptiveSparkPlanExec (whose children are Nil, so a plain collect
     // over an AQE-planned query inspects nothing — the round-5 version of
     // this test had exactly that blind spot).
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
-      p.collect(pf) ++
-        p.collect { case a: AdaptiveSparkPlanExec => a }
-          .flatMap(a => deepCollect(a.inputPlan)(pf))
     def isScalarSide(p: SparkPlan): Boolean =
       deepCollect(p) {
         case a: BaseAggregateExec if a.groupingExpressions.isEmpty => a
@@ -340,6 +344,54 @@ class PlanHygieneSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale broadcast allowlist entries: ${stale.mkString(", ")}")
   }
 
+  /** Queries that plan a WindowExec with NO partition spec — Spark moves
+    * every input row of such a window into one task. Each entry says what
+    * bounds that window's input: a value domain (vocabulary, days,
+    * distinct values, a plan constant), or a table that grows with the
+    * data. The list is asserted EXACT, like [[allowPanelBroadcast]]. */
+  private val allowUnpartitionedWindow = Set(
+    // rank readout over the converters' whole-second latency histogram: value domain
+    "q_funnel_latency",
+    // cumulative sums over ≤ HeapsMaxBuckets doc-id buckets: a plan constant
+    "q_heaps_curve",
+    // ntile over every customer row: grows with the customer table (q_ntile_dist is the scale twin)
+    "q_ntile",
+    // cumulative revenue over the parts dimension: grows with the part table
+    "q_pareto_abc",
+    // running sum and total over the day domain: calendar span
+    "q_reach_curve",
+    // three ntile windows over one row per customer: grows with the users
+    "q_rfm",
+    // coordinates for the query panel's vocabulary: bounded by the panel
+    "q_rrf_fusion",
+    // rank readouts over session duration and depth histograms: value domain
+    "q_session_stats",
+    // running min over distinct prices: value domain, but n rows when every price is distinct
+    "q_skyline",
+    // at-risk suffix sum over the day-offset histogram: calendar span
+    "q_survival_curve",
+    // rank and running sum over the vocabulary
+    "q_vocab_coverage",
+    // frequency-rank ids over the vocabulary
+    "q_vocab_encode",
+    // frequency rank over the vocabulary
+    "q_zipf_slope")
+
+  test("every unpartitioned window is allowlisted with what bounds its input") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    val flagged = SparkEntry.queries.toSeq.collect {
+      case (name, fn) if deepCollect(fn(spark, sf).queryExecution.executedPlan) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+        }.nonEmpty => name
+    }.toSet
+    val offenders = flagged diff allowUnpartitionedWindow
+    assert(offenders.isEmpty,
+      s"unpartitioned windows in: ${offenders.toSeq.sorted.mkString(", ")} — " +
+        "partition the window, or add an allowlist entry saying what bounds its input")
+    val stale = allowUnpartitionedWindow diff flagged
+    assert(stale.isEmpty, s"stale window allowlist entries: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
   test("a representative iterative-loop round plans no nested loop") {
     // the textrank rank-update round, on full (uncheckpointed) lineage —
     // covers the per-round plans the registry-wide tests never see
@@ -399,14 +451,5 @@ class PlanHygieneSpec extends SparkSpec {
       "cartesianproduct", "broadcastnestedloopjoin").foreach(j =>
       assert(!plan.contains(j), s"lloyd round unexpectedly plans $j"))
     assert(plan.contains("hashaggregate"), "lloyd round must aggregate cells")
-  }
-
-  test("a pca power round is map-side projection + one global aggregate, no join (r13)") {
-    val plan = operators.Similarity.pcaRoundFor(spark, sf)
-      .queryExecution.executedPlan.toString.toLowerCase
-    Seq("sortmergejoin", "broadcasthashjoin", "shuffledhashjoin",
-      "cartesianproduct", "broadcastnestedloopjoin").foreach(j =>
-      assert(!plan.contains(j), s"pca round unexpectedly plans $j"))
-    assert(plan.contains("hashaggregate"), "pca round must aggregate the 64 w-cells")
   }
 }

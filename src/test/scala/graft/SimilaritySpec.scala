@@ -750,6 +750,55 @@ class SimilaritySpec extends SparkSpec {
     assert(v64.map(math.abs).max == Similarity.PcaScale) // max-norm invariant
   }
 
+  test("pca: both trainers equal an exact BigInt replay of the corpus-sum rounds, bit for bit") {
+    import spark.implicits._
+    // the rounds as the oracle defines them, w = Σ (dv·v)·dv over the
+    // corpus rows, replayed here without the scatter matrix the trainers use
+    val qv = graft.Tables.embeddings(spark, sf)
+      .select(expr("transform(embedding, x -> cast(round((cast(x as double) + 1.0d) * 1000000, 0) as bigint))"))
+      .as[Seq[Long]].collect()
+    val mu = Array.tabulate(64)(j => (qv.map(r => BigInt(r(j))).sum / qv.length).toLong)
+    val dv = qv.map(r => Array.tabulate(64)(j => r(j) - mu(j)))
+    def corpusRound(v: Array[Long]): Array[BigInt] = {
+      val w = Array.fill(64)(BigInt(0))
+      dv.foreach { r =>
+        val d = BigInt((0 until 64).map(j => r(j) * v(j)).sum)
+        for (j <- 0 until 64) w(j) += d * r(j)
+      }
+      w
+    }
+    def normalize(w: Array[BigInt]): Array[Long] = {
+      val mx = w.map(_.abs).max
+      w.map(x => (x.abs * Similarity.PcaScale / mx * x.signum).toLong)
+    }
+    val start = Array.fill(64)(Similarity.PcaScale)
+    val pc1 = Iterator.iterate(start)(v => normalize(corpusRound(v)))
+      .take(Similarity.PcaRounds + 1).toIndexedSeq
+    for (k <- Seq(1, 3, Similarity.PcaRounds))
+      assert(Similarity.trainPc1Rounds(spark, sf, k).toSeq == pc1(k).toSeq, s"PC1 round $k")
+    val v1 = pc1.last
+    val vv1 = v1.map(x => BigInt(x) * x).sum
+    val pc2 = (1 to Similarity.Pc2Rounds).foldLeft(start) { (u, _) =>
+      val w = corpusRound(u)
+      val num = (0 until 64).map(i => w(i) * v1(i)).sum
+      val q = if (num < 0) -((-num) / vv1) else num / vv1
+      normalize(Array.tabulate(64)(i => w(i) - q * v1(i)))
+    }
+    assert(Similarity.trainedPc2(spark, sf).toSeq == pc2.toSeq)
+  }
+
+  test("constructing each trained PCA query in a fresh session launches at most 8 jobs") {
+    // the centering mean, the scatter matrix and the query's own eager
+    // work; the 64 + 32 power rounds run on the driver over the matrix
+    for (q <- Seq("q_pca_power", "q_pca_scores2", "q_pca_topk")) {
+      val fresh = spark.newSession()
+      try {
+        val jobs = jobsDuring(SparkEntry.queries(q)(fresh, sf))
+        assert(jobs <= 8, s"$q construction launched $jobs jobs")
+      } finally operators.SessionMemos.evict(fresh)
+    }
+  }
+
   test("embedding outliers: z/flags equal a driver replay of the cluster moments (r13)") {
     import spark.implicits._
     val got = Similarity.embeddingOutliers(spark, sf)

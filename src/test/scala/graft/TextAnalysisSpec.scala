@@ -305,6 +305,9 @@ class TextAnalysisSpec extends SparkSpec {
       // ten rounds run on the driver (the distributed rounds take ~3 each)
       val jobs = jobsDuring(SparkEntry.queries("q_textrank")(fresh, sf))
       assert(jobs <= 8, s"q_textrank construction launched $jobs jobs")
+      // the session memo serves the second construct
+      val warm = jobsDuring(SparkEntry.queries("q_textrank")(fresh, sf))
+      assert(warm == 0, s"q_textrank warm construction launched $warm jobs")
     } finally operators.SessionMemos.evict(fresh)
   }
 
