@@ -267,16 +267,16 @@ object ScaleCurve {
       // so matching postings stay ~1x — the prune-before-join discipline,
       // same claim as the bm25 row
       "phrase"      -> ((d, _) => TextAnalysis.phraseSearch(spark, d)),
-      // r16 (VERDICT r15 ask #6): the suffix family measured, not just
-      // argued — ladder build (⌈log₂ L⌉ bounded exchanges, each linear in
-      // suffixes), walk (2·R joins) and the island mask fold. Replicas
-      // keep per-replica duplication (suffixed tokens preserve in-replica
-      // spans), so true span structure scales linearly and any
-      // super-linear growth is the engine's. The memo keys on the dir:
-      // each factor pays its own build + serve, like for like
-      "suffix"      -> ((d, _) => graft.operators.SuffixDedup.suffixMask(spark, d)),
-      // the incremental route on the same corpus: window postings + the
-      // count aggregate — shuffle must track corpus tokens ~linearly
+      // the suffix array measured, not just argued — ladder build
+      // (⌈log₂ L⌉ bounded exchanges, each linear in suffixes), walk
+      // (2·R joins) and the top-span readout. Replicas keep per-replica
+      // duplication (suffixed tokens preserve in-replica spans), so true
+      // span structure scales linearly and any super-linear growth is the
+      // engine's. The memo keys on the dir: each factor pays its own
+      // build + serve, like for like
+      "suffix"      -> ((d, _) => graft.operators.SuffixDedup.suffixDedup(spark, d)),
+      // the mask on the same corpus, off the stored window postings +
+      // the count aggregate — shuffle must track corpus tokens ~linearly
       "suffix_incr" -> ((d, _) => graft.operators.SuffixDedup.suffixMaskIncremental(spark, d)))
     // shared-vocab regime (r10, ask #6): replicas keep the panel's terms,
     // so matching postings — and the one corpus shuffle — grow ~10x for a

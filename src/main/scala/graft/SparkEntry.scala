@@ -2223,13 +2223,12 @@ object SparkEntry {
     // the stored-artifact serve is the same frame materialized — SAME
     // oracle, two routes (the q_ivf_served discipline)
     "q_suffix_spans_served" -> operators.SuffixDedup.suffixDedupOracleSql,
-    // the removal step: per-doc duplicated-token coverage off the same
-    // fin frame (max adjacent lcp per start → gaps-and-islands interval
-    // union — r16, O(spans) instead of O(covered positions))
+    // the removal step: the suffix-array replay's fin frame folded into
+    // per-doc coverage — an independent route to the engine's window
+    // count (the fixed-window reduction in SuffixDedup.windowsOf)
     "q_suffix_mask" -> operators.SuffixDedup.suffixMaskOracleSql,
-    // the incremental serve off the stored window-posting index must
-    // equal the full suffix-array rebuild (the fixed-window reduction in
-    // SuffixDedup.windowsOf's scaladoc) — SAME oracle, two routes
+    // the same window count off the stored window-posting index — SAME
+    // oracle, two registered queries
     "q_suffix_mask_incremental" -> operators.SuffixDedup.suffixMaskOracleSql,
     // positional trigrams under the same portable 60-bit md5 hash the
     // winnowing/sampling oracles use; runs via gaps-and-islands

@@ -58,17 +58,16 @@ object SpillRehearsal {
     // path-grouped pattern-base aggregate, and the PCA covariance
     // triangle (2080-struct per-row expansion into a partial-combined
     // DECIMAL aggregate — the widest map-side fan-out on the board)
-    // — plus the r16 suffix family (VERDICT r15 ask #6): the doubling
-    // ladder's localCheckpoint blocks (MEMORY_AND_DISK — the largest
-    // cached state on the board, one rank table per round) must degrade
-    // to disk under the starved pool while the walk + island fold still
-    // produce identical hashes; the window-posting incremental serve
-    // exercises the stored-index read path under the same pressure
+    // — plus the suffix family: the span readout's doubling ladder
+    // (localCheckpoint blocks, MEMORY_AND_DISK — the largest cached state
+    // on the board, one rank table per round) must degrade to disk under
+    // the starved pool while the walk still produces identical hashes;
+    // the incremental mask exercises the stored-index read path too
     val queries = Seq("q_neardup_jaccard", "q_neardup_minhash",
       "q_neardup_clusters", "q_dedup_incremental",
       "q_assoc_rules3", "q_quantile_cube", "q_spatial_join",
       "q_tpch_q18", "q_fpgrowth", "q_pca_cov",
-      "q_suffix_mask", "q_suffix_mask_incremental")
+      "q_suffix_dedup", "q_suffix_mask", "q_suffix_mask_incremental")
     val results = queries.map { name =>
       val rows = SparkEntry.queries(name)(spark, sfDir)
         .collect().map(_.toString).sorted

@@ -229,8 +229,8 @@ object Pipeline {
     * dup_ppm ≤ [[DupPpmMax]], carrying the per-doc duplicated-content
     * budget in the output so downstream mixing can re-weight partially
     * duplicated docs instead of recomputing. Composition stays on the
-    * narrow doc_id key; the suffix family's walk frame is session-
-    * memoized, so the gate costs one synopsis-sized join at serve time.
+    * narrow doc_id key; the mask is [[SuffixDedup.suffixMask]]'s lazy
+    * window count, so the gate adds no construct-time job.
     */
   def curatedSubstrKeepSet(spark: SparkSession, sfDir: String): DataFrame =
     curatedRaw(spark, sfDir)

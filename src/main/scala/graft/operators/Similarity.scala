@@ -2778,75 +2778,81 @@ object Similarity {
     *   - top_beats_iterate: R1 ≥ the Rayleigh quotient of
     *     [[trainedPc1]] (64 power rounds over the same S) — the
     *     eigensolve can only improve on the iteration.
+    *
+    * MEMOIZED per (session, sfDir): the verification aggregate is an
+    * eager collect.
     */
-  def pcaTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val deltas = pcaDeltas(spark, sfDir)
-    val s = pcaCovMatrix(spark, sfDir)
-    val (evals, evecs) = jacobiEig(s.map(_.map(_.toDouble)))
-    val order = (0 until PcaDim).sortBy(i => -evals(i))
-    val vq1 = quantizeMaxNorm(evecs(order(0)))
-    val vq2 = quantizeMaxNorm(evecs(order(1)))
-    val vit = trainedPc1(spark, sfDir)
-    def vtv(v: Array[Long]) = v.map(x => BigInt(x) * BigInt(x)).foldLeft(BigInt(0))(_ + _)
-    val (vv1, vv2, vvit) = (vtv(vq1), vtv(vq2), vtv(vit))
-    def dot(v: Array[Long]) = dotLong(col("dv"), typedlit(v.toSeq))
-    // ONE exact aggregate: n, trace, 3 Rayleigh numerators, 2×64 S·v cells
-    val withD = deltas.withColumn("d1", dot(vq1)).withColumn("d2", dot(vq2))
-      .withColumn("dit", dot(vit))
-    val aggCols =
-      Seq(count(lit(1)).as("n"),
-        sum(dotLong(col("dv"), col("dv"))
-          .cast("decimal(38,0)")).as("trace"),
-        sum(col("d1").cast("decimal(38,0)") * col("d1")).as("sd1"),
-        sum(col("d2").cast("decimal(38,0)") * col("d2")).as("sd2"),
-        sum(col("dit").cast("decimal(38,0)") * col("dit")).as("sdit")) ++
-      (1 to PcaDim).map(i =>
-        sum(col("d1").cast("decimal(38,0)") * element_at(col("dv"), i)).as(s"w1_$i")) ++
-      (1 to PcaDim).map(i =>
-        sum(col("d2").cast("decimal(38,0)") * element_at(col("dv"), i)).as(s"w2_$i"))
-    val r = withD.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    val n = r.getLong(0)
-    def big(idx: Int): BigInt = BigInt(r.getDecimal(idx).toBigIntegerExact)
-    val trace = big(1)
-    val (sd1, sd2, sdit) = (big(2), big(3), big(4))
-    val w1 = (0 until PcaDim).map(i => big(5 + i)).toArray
-    val w2 = (0 until PcaDim).map(i => big(5 + PcaDim + i)).toArray
-    // Rayleigh quotients in S-scale (doubles derived from exact sums)
-    val r1 = sd1.toDouble / vv1.toDouble
-    val r2 = sd2.toDouble / vv2.toDouble
-    val rit = sdit.toDouble / vvit.toDouble
-    def residOk(w: Array[BigInt], vq: Array[Long], ray: Double, vv: BigInt): Boolean = {
-      val res = math.sqrt((0 until PcaDim)
-        .map(i => { val x = w(i).toDouble - ray * vq(i); x * x }).sum)
-      res <= 1e-3 * ray * math.sqrt(vv.toDouble)
+  def pcaTopk(spark: SparkSession, sfDir: String): DataFrame =
+    pcaTopkMemo.memo(spark, sfDir) {
+      val deltas = pcaDeltas(spark, sfDir)
+      val s = pcaCovMatrix(spark, sfDir)
+      val (evals, evecs) = jacobiEig(s.map(_.map(_.toDouble)))
+      val order = (0 until PcaDim).sortBy(i => -evals(i))
+      val vq1 = quantizeMaxNorm(evecs(order(0)))
+      val vq2 = quantizeMaxNorm(evecs(order(1)))
+      val vit = trainedPc1(spark, sfDir)
+      def vtv(v: Array[Long]) = v.map(x => BigInt(x) * BigInt(x)).foldLeft(BigInt(0))(_ + _)
+      val (vv1, vv2, vvit) = (vtv(vq1), vtv(vq2), vtv(vit))
+      def dot(v: Array[Long]) = dotLong(col("dv"), typedlit(v.toSeq))
+      // ONE exact aggregate: n, trace, 3 Rayleigh numerators, 2×64 S·v cells
+      val withD = deltas.withColumn("d1", dot(vq1)).withColumn("d2", dot(vq2))
+        .withColumn("dit", dot(vit))
+      val aggCols =
+        Seq(count(lit(1)).as("n"),
+          sum(dotLong(col("dv"), col("dv"))
+            .cast("decimal(38,0)")).as("trace"),
+          sum(col("d1").cast("decimal(38,0)") * col("d1")).as("sd1"),
+          sum(col("d2").cast("decimal(38,0)") * col("d2")).as("sd2"),
+          sum(col("dit").cast("decimal(38,0)") * col("dit")).as("sdit")) ++
+        (1 to PcaDim).map(i =>
+          sum(col("d1").cast("decimal(38,0)") * element_at(col("dv"), i)).as(s"w1_$i")) ++
+        (1 to PcaDim).map(i =>
+          sum(col("d2").cast("decimal(38,0)") * element_at(col("dv"), i)).as(s"w2_$i"))
+      val r = withD.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+      val n = r.getLong(0)
+      def big(idx: Int): BigInt = BigInt(r.getDecimal(idx).toBigIntegerExact)
+      val trace = big(1)
+      val (sd1, sd2, sdit) = (big(2), big(3), big(4))
+      val w1 = (0 until PcaDim).map(i => big(5 + i)).toArray
+      val w2 = (0 until PcaDim).map(i => big(5 + PcaDim + i)).toArray
+      // Rayleigh quotients in S-scale (doubles derived from exact sums)
+      val r1 = sd1.toDouble / vv1.toDouble
+      val r2 = sd2.toDouble / vv2.toDouble
+      val rit = sdit.toDouble / vvit.toDouble
+      def residOk(w: Array[BigInt], vq: Array[Long], ray: Double, vv: BigInt): Boolean = {
+        val res = math.sqrt((0 until PcaDim)
+          .map(i => { val x = w(i).toDouble - ray * vq(i); x * x }).sum)
+        res <= 1e-3 * ray * math.sqrt(vv.toDouble)
+      }
+      def rayleighOk(ray: Double, lam: Double): Boolean =
+        math.abs(ray - lam) <= 1e-6 * math.abs(lam)
+      val dot12 = (0 until PcaDim).map(i => BigInt(vq1(i)) * BigInt(vq2(i)))
+        .foldLeft(BigInt(0))(_ + _)
+      val orthOk = dot12.abs.toDouble <= 1e-3 * math.sqrt(vv1.toDouble * vv2.toDouble)
+      // diag (ADVICE r14): the verdicts are expected-TRUE brackets whose
+      // oracle side is constant, so a future flip would otherwise fail the
+      // hash with no readout. 'ok' while every verdict holds (hash-stable);
+      // on any flip the column carries the measured quantities, so the
+      // Verify parquet itself says WHICH threshold moved and by how much.
+      def rel(ray: Double, lam: Double) = math.abs(ray - lam) / math.abs(lam)
+      def diag(rayRel: Double, ok: Seq[Boolean]): String =
+        if (ok.forall(identity)) "ok"
+        else f"rayleigh_rel=$rayRel%.3e;r1=$r1%.6e;r2=$r2%.6e;rit=$rit%.6e;" +
+          f"orth_rel=${dot12.abs.toDouble / math.sqrt(vv1.toDouble * vv2.toDouble)}%.3e"
+      val v1 = Seq(rayleighOk(r1, evals(order(0))), residOk(w1, vq1, r1, vv1),
+        orthOk, r1 >= r2, r1 >= rit * (1 - 1e-9))
+      val v2 = Seq(rayleighOk(r2, evals(order(1))), residOk(w2, vq2, r2, vv2),
+        orthOk, r1 >= r2, r1 >= rit * (1 - 1e-9))
+      import spark.implicits._
+      Seq(
+        (1L, n, trace.toString, v1(0), v1(1), v1(2), v1(3), v1(4),
+          diag(rel(r1, evals(order(0))), v1)),
+        (2L, n, trace.toString, v2(0), v2(1), v2(2), v2(3), v2(4),
+          diag(rel(r2, evals(order(1))), v2)))
+        .toDF("component", "n_vectors", "trace_str", "rayleigh_ok",
+          "resid_ok", "orth_ok", "order_ok", "top_beats_iterate", "diag")
+        .orderBy("component")
     }
-    def rayleighOk(ray: Double, lam: Double): Boolean =
-      math.abs(ray - lam) <= 1e-6 * math.abs(lam)
-    val dot12 = (0 until PcaDim).map(i => BigInt(vq1(i)) * BigInt(vq2(i)))
-      .foldLeft(BigInt(0))(_ + _)
-    val orthOk = dot12.abs.toDouble <= 1e-3 * math.sqrt(vv1.toDouble * vv2.toDouble)
-    // diag (ADVICE r14): the verdicts are expected-TRUE brackets whose
-    // oracle side is constant, so a future flip would otherwise fail the
-    // hash with no readout. 'ok' while every verdict holds (hash-stable);
-    // on any flip the column carries the measured quantities, so the
-    // Verify parquet itself says WHICH threshold moved and by how much.
-    def rel(ray: Double, lam: Double) = math.abs(ray - lam) / math.abs(lam)
-    def diag(rayRel: Double, ok: Seq[Boolean]): String =
-      if (ok.forall(identity)) "ok"
-      else f"rayleigh_rel=$rayRel%.3e;r1=$r1%.6e;r2=$r2%.6e;rit=$rit%.6e;" +
-        f"orth_rel=${dot12.abs.toDouble / math.sqrt(vv1.toDouble * vv2.toDouble)}%.3e"
-    val v1 = Seq(rayleighOk(r1, evals(order(0))), residOk(w1, vq1, r1, vv1),
-      orthOk, r1 >= r2, r1 >= rit * (1 - 1e-9))
-    val v2 = Seq(rayleighOk(r2, evals(order(1))), residOk(w2, vq2, r2, vv2),
-      orthOk, r1 >= r2, r1 >= rit * (1 - 1e-9))
-    import spark.implicits._
-    Seq(
-      (1L, n, trace.toString, v1(0), v1(1), v1(2), v1(3), v1(4),
-        diag(rel(r1, evals(order(0))), v1)),
-      (2L, n, trace.toString, v2(0), v2(1), v2(2), v2(3), v2(4),
-        diag(rel(r2, evals(order(1))), v2)))
-      .toDF("component", "n_vectors", "trace_str", "rayleigh_ok",
-        "resid_ok", "orth_ok", "order_ok", "top_beats_iterate", "diag")
-      .orderBy("component")
-  }
+
+  private val pcaTopkMemo = new SessionMemo[String, DataFrame]
 }

@@ -53,20 +53,25 @@ import org.apache.spark.sql.functions._
   * 2^R); the derivation makes the in-plan guard structurally unreachable,
   * and it is also tightened to `>= 2^R` so even a hand-built ladder
   * fails loud, never one token short.
+  *
+  * The ladder and walk serve only the span readouts. Both MASK queries
+  * are the fixed-window count of [[windowsOf]] (a word count keyed by
+  * the window), proven equal to the suffix-array mask; their DuckDB twin
+  * replays the suffix array, so the hash gate checks one against the
+  * other.
   */
 object SuffixDedup {
 
   /** Doubling-round FALLBACK for oracle generation only: used when no
     * corpus derivation has run in this JVM (a filtered Verify that never
-    * touched the suffix family — whose dumps then don't exist either, so
-    * the fallback oracle is never compared). The driver corpora max out
-    * near 95 tokens at every SF, where the derivation also lands on 7. */
+    * ran `q_suffix_dedup`; a longer corpus trips the oracle's reach
+    * guard). The driver corpora max out near 95 tokens, where R = 7. */
   val SuffixRoundsDefault = 7
 
   /** The most recently DERIVED round count. Verify dumps `oracleSql`
     * AFTER all queries ran in the same JVM, so the oracle generators
-    * below interpolate exactly the round count the engine computed with
-    * (one corpus per Verify run — the driver's contract). */
+    * below interpolate exactly the round count `q_suffix_dedup` computed
+    * with (one corpus per Verify run — the driver's contract). */
   private val lastRounds =
     new java.util.concurrent.atomic.AtomicInteger(SuffixRoundsDefault)
 
@@ -180,16 +185,17 @@ object SuffixDedup {
     ladder
   }
 
-  /** Span length at which [[suffixMask]] marks tokens as duplicated
-    * content (Lee et al. use 50 BPE tokens at web scale; 10 here sits
-    * cleanly above this corpus's ~6-token random-collision ceiling —
-    * 31-word vocabulary, ~1e9 position pairs at sf0.01 — while catching
-    * the planted full-document duplicates at lcp ≈ 90). */
+  /** Span length at which both mask queries mark tokens as duplicated
+    * content, and so the [[windowsOf]] window length (Lee et al. use 50
+    * BPE tokens at web scale; 10 here sits cleanly above this corpus's
+    * ~6-token random-collision ceiling — 31-word vocabulary, ~1e9
+    * position pairs at sf0.01 — while catching the planted full-document
+    * duplicates at lcp ≈ 90). */
   val MaskMinLen = 10
 
   /** Session memo for the capped adjacency-LCP frame — the expensive
     * half (suffix order + the 2·R-join walk), shared by the span top-k
-    * and the masking readout; checkpointed so consumers replan from a
+    * and the stored LCP index; checkpointed so consumers replan from a
     * materialized leaf. */
   private val lcpsMemo = new SessionMemo[String, DataFrame]
 
@@ -234,33 +240,15 @@ object SuffixDedup {
   /** THE REMOVAL STEP (`q_suffix_mask`) — what Lee et al.'s ExactSubstr
     * dedup actually does to the corpus: every token covered by some
     * duplicated span of ≥ [[MaskMinLen]] tokens is flagged, per
-    * document. A position p's longest duplicated prefix is the max of
-    * its two ADJACENT lcps in suffix order (the classic suffix-array
-    * identity: LCP(p, q) over all q maximizes at a rank neighbor), so
-    * coverage = ∪ [p, p + maxAdjLcp(p) − 1] over qualifying starts —
-    * exact, from the same walk frame the top-k readout shares. Output:
-    * per-doc token counts, duplicated-token counts and the exact ppm —
-    * the per-document removal budget an ExactSubstr pass reports. */
-  def suffixMask(spark: SparkSession, sfDir: String): DataFrame =
-    maskOf(Tables.documents(spark, sfDir), adjacentLcpsMemo(spark, sfDir))
-
-  private[graft] def suffixMaskFrom(docs: DataFrame): DataFrame =
-    maskOf(docs, adjacentLcps(docs, buildRanks(docs)))
-
-  /** Qualifying spans [pos, pos + maxAdjLcp − 1] folded into per-doc
-    * coverage by the interval union in [[islandMask]] (r16 — VERDICT r15
-    * ask #1: the r15 form exploded every covered POSITION before a
-    * distinct, Σ per-start lcp ≈ O(doc_len × avg_lcp) map-side rows,
-    * which a majority-duplicated 50k-token web document turns into ~10⁹
-    * intermediate rows; the island fold costs O(qualifying starts) for
-    * the identical answer). */
-  private[graft] def maskOf(docs: DataFrame, al: DataFrame): DataFrame = {
-    val md = al.select(col("da").as("doc_id"), col("pa").as("pos"), col("lcp"))
-      .union(al.select(col("db").as("doc_id"), col("pb").as("pos"), col("lcp")))
-      .groupBy("doc_id", "pos").agg(max("lcp").as("md"))
-      .filter(col("md") >= MaskMinLen)
-    islandMask(docs, md.select(col("doc_id"), col("pos"),
-      (col("pos") + col("md") - 1).as("pend")))
+    * document. By the fixed-window reduction ([[windowsOf]]) that is
+    * exactly the coverage of the [[MaskMinLen]]-token windows occurring
+    * at ≥ 2 positions — a word count with the window as the key, so the
+    * mask needs no suffix ranks and no LCP walk. Output: per-doc token
+    * counts, duplicated-token counts and the exact ppm — the per-document
+    * removal budget an ExactSubstr pass reports. */
+  def suffixMask(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = Tables.documents(spark, sfDir)
+    windowMaskFrom(docs, windowsOf(docs))
   }
 
   /** Covered-token count per document from qualifying spans
@@ -303,13 +291,14 @@ object SuffixDedup {
     * a start with t ∈ [s, s + L − 1]. ∎
     *
     * So the ≥[[MaskMinLen]] mask needs NO suffix ranks at all — only
-    * per-window occurrence counts — and window postings are per-row
-    * facts of their own document, which a stored index can APPEND: the
-    * Lee et al. production shape, where a new crawl batch is masked
-    * against the standing corpus without re-ranking it. The registered
-    * serve ([[suffixMaskIncremental]]) hash-equals the full suffix-array
-    * rebuild, so both share ONE oracle (the q_scd2_incremental /
-    * q_ivf_incremental discipline).
+    * per-window occurrence counts — and both mask queries are served
+    * this way: [[suffixMask]] counts the corpus's windows at scan time,
+    * [[suffixMaskIncremental]] counts stored postings. Window postings
+    * are per-row facts of their own document, which a stored index can
+    * APPEND: the Lee et al. production shape, where a new crawl batch is
+    * masked against the standing corpus without re-ranking it. Both
+    * queries share ONE oracle, the suffix-array replay of
+    * [[suffixMaskOracleSql]].
     *
     * The posting key is the window's exact token content, so the serve
     * is token-exact like the suffix walk (no fingerprint collisions to
@@ -345,8 +334,8 @@ object SuffixDedup {
     * STORED window-posting index (two appended batches) — one
     * index-grain count aggregate + one semi-join back to the postings +
     * the per-doc island fold; the corpus text is touched only for the
-    * n_tokens readout. Result hash-equals [[suffixMask]]'s full rebuild
-    * (the reduction above), so both share one oracle. */
+    * n_tokens readout. Result hash-equals [[suffixMask]], which runs the
+    * same body over the corpus's windows, so both share one oracle. */
   def suffixMaskIncremental(spark: SparkSession, sfDir: String): DataFrame =
     windowMaskFrom(Tables.documents(spark, sfDir),
       Tables.cachedScan(spark, winIndexDir(spark, sfDir)))
@@ -441,9 +430,9 @@ object SuffixDedup {
        |ORDER BY lcp DESC, doc_a, pos_a, doc_b, pos_b""".stripMargin
 
   /** Oracle for [[suffixMask]] AND [[suffixMaskIncremental]] (one oracle,
-    * two registered routes — the incremental serve must equal the full
-    * rebuild): the fin frame folded into per-doc interval-union
-    * coverage. */
+    * two registered queries over the window count): the suffix-array
+    * replay's fin frame folded into per-doc interval-union coverage — an
+    * independent route to the same mask. */
   def suffixMaskOracleSql: String =
     s"""WITH $suffixMaskCtes
        |SELECT l.doc_id, CAST(l.len AS BIGINT) AS n_tokens,

@@ -159,6 +159,15 @@ class PipelineSpec extends SparkSpec {
     assert(card.size == 7)
   }
 
+  test("constructing q_pipeline_substr in a fresh session launches at most 25 jobs") {
+    val fresh = spark.newSession()
+    try {
+      // the curation memos under curatedRaw; the mask adds no eager job
+      val jobs = jobsDuring(SparkEntry.queries("q_pipeline_substr")(fresh, sf))
+      assert(jobs <= 25, s"q_pipeline_substr construction launched $jobs jobs")
+    } finally operators.SessionMemos.evict(fresh)
+  }
+
   test("substr gate: subset of curated, drops exactly the over-budget docs (r15)") {
     import spark.implicits._
     import graft.operators.SuffixDedup

@@ -795,6 +795,9 @@ class SimilaritySpec extends SparkSpec {
       try {
         val jobs = jobsDuring(SparkEntry.queries(q)(fresh, sf))
         assert(jobs <= 8, s"$q construction launched $jobs jobs")
+        // the session memos serve the second construct
+        val warm = jobsDuring(SparkEntry.queries(q)(fresh, sf))
+        assert(warm == 0, s"$q warm construction launched $warm jobs")
       } finally operators.SessionMemos.evict(fresh)
     }
   }
