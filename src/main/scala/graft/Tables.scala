@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SessionShim
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.SessionMemo
 
 /** Table loaders over the driver-generated parquet testdata (TESTDATA.md,
-  * FIXTURES.md). All schemas are inferred from parquet footers — no DDL.
+  * FIXTURES.md). All schemas are read from parquet footers on the driver
+  * ([[cachedScan]]) — no DDL and no schema-inference job.
   *
   * Scale note: each loader is a plain parquet scan, so Catalyst predicate
   * pushdown / column pruning apply to whatever query is layered on top. At
@@ -15,29 +19,53 @@ import graft.operators.SessionMemo
   */
 object Tables {
 
-  /** Session-scoped parquet schema memo (r16 optimization, guide §6).
-    *
-    * `spark.read.parquet(path)` infers the schema by re-reading the file
-    * footer on EVERY DataFrame construction — measured ~60 ms per call on
-    * this host vs ~5 ms with an explicit schema (r16 probe). The
-    * bench constructs each of 316 queries three times, most touching 1-4
-    * table scans, so footer re-inference alone is tens of seconds of pure
-    * metadata overhead. At production scale the same fix is what a real
-    * catalog/table format provides: schema comes from the metastore or
-    * manifest, never from re-reading footers per query.
-    *
-    * Correctness: the memoized schema IS the inferred schema of the same
-    * immutable file (testdata is never rewritten within a session — the
-    * standing [[SessionMemo]] assumption), so `read.schema(memo).parquet(path)`
-    * is plan-identical to inference. */
-  private val schemaMemo = new SessionMemo[String, org.apache.spark.sql.types.StructType]
+  /** Session-scoped parquet schema memo, keyed by the store's path and
+    * the path, length and mtime of the file its schema is read from. */
+  private val schemaMemo = new SessionMemo[(String, String, Long, Long), StructType]
 
-  /** Parquet scan with session-memoized schema — for immutable files only
-    * (the ten testdata tables and write-once artifact stores). Do NOT use
-    * for paths whose schema can evolve within a session. */
+  private val SummaryFiles = Seq("_common_metadata", "_metadata")
+
+  /** Parquet scan with the schema read from a footer on the driver.
+    *
+    * `spark.read.parquet(path)` infers the schema in a Spark job (a
+    * "parquet at" stage) that reads one footer: the `_common_metadata`
+    * or `_metadata` summary if the store has one, else the first data
+    * file in path order. In a fresh session that is one job per table
+    * (~900 ms for perfbench's `cold_build` tables). This reads the same
+    * footer on the driver and converts it with Spark's own converter
+    * (`SessionShim.parquetSchema`), then scans with that schema as the
+    * user-given one. Partition columns are still inferred from the
+    * directory names by the scan's own listing, so the frame's schema
+    * equals inference for a single file, a multi-file store and a
+    * partitioned directory (TablesSchemaSpec).
+    *
+    * The schema is memoized per session, keyed by the footer file's
+    * path, length and mtime: a store rewritten in place is read again
+    * rather than masked. Appending files that sort after the first one
+    * leaves the key as it was, and the store is read with the first
+    * file's schema, as Spark's non-merging inference reads it. */
   def cachedScan(spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaMemo.memo(spark, path)(spark.read.parquet(path).schema)
+    val sch = footerFile(spark, path) match {
+      case Some(f) =>
+        schemaMemo.memo(spark, (path, f.getPath.toString, f.getLen, f.getModificationTime))(
+          SessionShim.parquetSchema(spark, f))
+      case None => spark.read.parquet(path).schema // no data file: Spark's own error
+    }
     spark.read.schema(sch).parquet(path)
+  }
+
+  /** The file whose footer Spark's non-merging inference reads for `path`
+    * (see [[cachedScan]]), listed on the driver as Spark lists it. */
+  private def footerFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => SessionShim.isHiddenFile(c.getPath.getName)).flatMap(leaves)
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    SummaryFiles.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !SummaryFiles.contains(f.getPath.getName)))
   }
 
   /** Generic parquet scan for one of the ten testdata tables. */

@@ -93,16 +93,28 @@ object StreamingOps {
     * mtimes (the file source's oldest-first order), streams them through
     * `xform` one file per micro-batch under Trigger.AvailableNow, and
     * returns the memory-sink table. Deterministic batch boundaries are
-    * what turn streaming semantics into a closed-form DuckDB oracle. */
+    * what turn streaming semantics into a closed-form DuckDB oracle.
+    *
+    * The fixture writes and the stream run in [[graft.Session.localIo]],
+    * a private clone of `spark` whose local files (fixture, checkpoint,
+    * state store) go through `graft.io` and start no processes; the stock
+    * local file system started ~400 for one cold `q_stream_sessions`. The
+    * batch frames are built in `spark` and re-homed in the clone; the
+    * returned frame belongs to the clone. The fixture directories are
+    * owned by `spark`, so its eviction deletes them, and nothing is
+    * memoized under the clone. */
   private def runFileStreamReplay(
       spark: org.apache.spark.sql.SparkSession,
       batches: Seq[DataFrame],
       mode: OutputMode)(xform: DataFrame => DataFrame): DataFrame = {
     import graft.operators.SessionMemos
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val io = graft.Session.localIo(spark)
     val dir = SessionMemos.tempDir(spark, "graft-stream-fixture")
     batches.zipWithIndex.foreach { case (bdf, b) =>
       val stage = SessionMemos.tempDir(spark, "graft-stream-stage")
-      bdf.coalesce(1).write.mode("overwrite").parquet(stage)
+      ColumnShim.ofRows(io, bdf.queryExecution.analyzed)
+        .coalesce(1).write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       val dst = new java.io.File(dir, s"batch-$b.parquet")
@@ -115,14 +127,14 @@ object StreamingOps {
         s"could not pin mtime of ${dst.getName}; micro-batch order would be nondeterministic")
     }
     val sink = "graft_replay_sink_" + java.lang.Long.toHexString(System.nanoTime())
-    val stream = spark.readStream.schema(batches.head.schema)
+    val stream = io.readStream.schema(batches.head.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val sq = xform(stream).writeStream
       .format("memory").queryName(sink).outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     sq.awaitTermination()
-    spark.table(sink)
+    io.table(sink)
   }
 
   private def runWatermarkReplay(spark: org.apache.spark.sql.SparkSession,

@@ -61,6 +61,16 @@ class GraftExtensionsSpec extends SparkSpec {
     val confWrites = hits(operatorCode, """conf\.(set|unset)\(""".r)
     assert(confWrites.isEmpty,
       s"operator or loader changes the session conf:\n${confWrites.mkString("\n")}")
+    // the file-system keys and the session clone that carries them are
+    // set in one place: Session (builder and localIo), through graftshim
+    val fsPattern = """fs\.file\.impl|fs\.AbstractFileSystem|cloneSession""".r
+    val (arming, others) = sources.partition { p =>
+      p.endsWith("graft/Session.scala") || p.toString.contains("/graftshim/")
+    }
+    assert(hits(arming, fsPattern).nonEmpty, "the guard's pattern matches nothing in graft.Session")
+    val fsArming = hits(others, fsPattern)
+    assert(fsArming.isEmpty,
+      s"file-system keys or a session clone outside graft.Session:\n${fsArming.mkString("\n")}")
     val tempFns = hits(sources, """createOrReplaceTempFunction""".r)
     assert(tempFns.isEmpty,
       s"runtime SQL-function registration (GraftExtensions injects it):\n${tempFns.mkString("\n")}")

@@ -50,12 +50,20 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Number of Spark jobs `body` launches on the shared context, not
     * counting parquet footer/schema reads (stages named "parquet at …"),
     * which depend on what earlier tests already read. */
-  def jobsDuring(body: => Any): Int = {
+  def jobsDuring(body: => Any): Int =
+    jobsWhere(js => !js.stageInfos.exists(_.name.startsWith("parquet at")))(body)
+
+  /** Number of Spark jobs `body` launches on the shared context, parquet
+    * schema and write jobs included. */
+  def allJobsDuring(body: => Any): Int = jobsWhere(_ => true)(body)
+
+  private def jobsWhere(counted: org.apache.spark.scheduler.SparkListenerJobStart => Boolean)
+                       (body: => Any): Int = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (!js.stageInfos.exists(_.name.startsWith("parquet at"))) jobs.incrementAndGet()
+        if (counted(js)) jobs.incrementAndGet()
     }
     org.apache.spark.graftshim.ListenerBusShim.drain(sc)
     sc.addSparkListener(listener)
@@ -64,6 +72,31 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.graftshim.ListenerBusShim.drain(sc)
       jobs.get()
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The command lines of the operating-system processes the JVM starts
+    * while `body` runs: the `jdk.ProcessStart` events of a JFR recording
+    * around it. Two background starts land in whichever window they
+    * happen to fall and are left out: Spark's `rm -rf` of a collected
+    * session's artifact directory (a Cleaner runs it when the session
+    * object is garbage-collected) and the executor metrics' one-time
+    * `getconf PAGESIZE`. */
+  def processesDuring(body: => Any): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("graft-processes", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+        .filterNot(c => c == "getconf PAGESIZE" || (c.startsWith("rm -rf ") && c.contains("/artifacts-")))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
   }
 
   override def afterAll(): Unit = spark.catalog.clearCache()
